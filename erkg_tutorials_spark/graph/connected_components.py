@@ -173,7 +173,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 20,
-    tune_loop_confs: bool = True,
     input_canonical: bool = False,
 ) -> DataFrame:
     """(id, component) — component is the minimum vertex id reachable.
@@ -181,11 +180,11 @@ def connected_components(
     Iterates large-star/small-star until the edge set is a forest of
     stars (fixpoint), then reads components off the star edges.
 
-    ``tune_loop_confs``: same rationale (and measurement method) as
-    graph/pagerank.py — every round re-shuffles an edge set of known,
-    shrinking size, so AQE's per-round re-planning is pure driver
-    overhead and the partition count is derived once from the
-    materialized canonical edge count. The stars' window minimums
+    The rounds run in the tuned loop window (graph/loop_confs.py), for
+    the same reason as in graph/pagerank.py — every round re-shuffles an
+    edge set of known, shrinking size, so AQE's per-round re-planning is
+    pure driver overhead and the partition count is derived once from
+    the materialized canonical edge count. The stars' window minimums
     aggregate within one exchange, so hub-vertex skew costs a local
     sort, not a blown partition. The tuned confs live on a cloned
     session (graph/loop_confs.py), so concurrent queries on the
@@ -236,10 +235,8 @@ def connected_components(
         return bad.isEmpty()
 
     spark = edges.sparkSession
-    # counted unconditionally: the route guard must see the real edge
-    # count even when loop tuning is off (the pagerank ADVICE fix,
-    # applied here from the start) — e is checkpoint-backed, so the
-    # count materializes nothing new
+    # the route guard and the loop sizing share this count — e is
+    # checkpoint-backed, so it materializes nothing new
     n_edges = e.count()
     # measured GraphX crossover (module header): above the threshold
     # the star loop's per-decade bend (11.2x at the r11 100x notch) is
@@ -249,10 +246,7 @@ def connected_components(
     if n_edges >= _cc_graphx_min_edges():
         return _cc_graphx(e, vertices)
     converged = False
-    with tuned_loop_session(spark, n_edges, enabled=tune_loop_confs) as (
-        _loop,
-        rebind,
-    ):
+    with tuned_loop_session(spark, n_edges) as (_loop, rebind):
         e = rebind(e)
         for i in range(max_rounds):
             e = chain(_small_star(_large_star(e)))

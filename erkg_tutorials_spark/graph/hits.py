@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hits(edges: DataFrame, iters: int = 3, tune_loop_confs: bool = True) -> DataFrame:
+def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Run `iters` double-rounds of un-normalized HITS.
 
     ``edges(src, dst)`` directed. Returns one row per vertex-side:
@@ -51,11 +51,7 @@ def hits(edges: DataFrame, iters: int = 3, tune_loop_confs: bool = True) -> Data
 
     spark = edges.sparkSession
     e0 = edges.select("src", "dst").localCheckpoint(eager=True)
-    n_edges = e0.count() if tune_loop_confs else 0
-    with tuned_loop_session(spark, n_edges, enabled=tune_loop_confs) as (
-        _loop,
-        rebind,
-    ):
+    with tuned_loop_session(spark, e0.count()) as (_loop, rebind):
         from erkg_tutorials_spark.graph.ckpt import CheckpointChain
 
         chain = CheckpointChain()

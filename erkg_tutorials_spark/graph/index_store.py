@@ -40,7 +40,6 @@ ARTIFACTS = (
     "trade_edges_fwd",
     "trade_sym_verts",
     "trade_sym_e_deg",
-    "trade_sym_danglers",
     "ppr_watchlist_tp",
     "part_coorder_edges",
     "coorder_nbrs",
@@ -56,7 +55,6 @@ def _getters(spark: SparkSession, sf_dir: str) -> dict:
         "trade_edges_fwd": lambda: gq.trade_edges_fwd(spark, sf_dir),
         "trade_sym_verts": lambda: gq.trade_graph_invariants(spark, sf_dir)[0],
         "trade_sym_e_deg": lambda: gq.trade_graph_invariants(spark, sf_dir)[1],
-        "trade_sym_danglers": lambda: gq.trade_graph_invariants(spark, sf_dir)[2],
         "ppr_watchlist_tp": lambda: gq.ppr_watchlist_tp_cached(spark, sf_dir),
         "part_coorder_edges": lambda: gq.part_coorder_edges(spark, sf_dir),
         "coorder_nbrs": lambda: gq.coorder_nbrs_cached(spark, sf_dir),

@@ -9,8 +9,7 @@ Spark-first design: each hop is one equi-join ``frontier ⋈ edges`` +
 ``distinct()``. Catalyst picks broadcast-hash when the frontier is small
 (the usual case — 17 seeds in the reference) and AQE handles skewed hub
 vertices. At true 100 TB graph scale, per-hop ``distinct`` bounds
-frontier growth and ``localCheckpoint`` (optional) truncates the
-lineage for deep k.
+frontier growth.
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ def k_hop(
     src: str = "src",
     dst: str = "dst",
     id_col: str = "id",
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """Vertex ids reachable from ``seeds`` in ≤ k directed hops.
 
@@ -39,7 +37,7 @@ def k_hop(
     """
     reach = seeds.select(F.col(id_col).alias("id")).distinct()
     frontier = reach
-    for i in range(1, k + 1):
+    for _ in range(k):
         # BFS frontier expansion: N(reach) ≡ previous-frontier neighbors
         # ∪ already-reached, so expanding only the frontier is equivalent
         # to the reference's cumulative expansion — at a fraction of the
@@ -50,8 +48,6 @@ def k_hop(
             .distinct()
         )
         reach = reach.unionByName(frontier)
-        if checkpoint_every and i % checkpoint_every == 0:
-            reach = reach.localCheckpoint(eager=False)
     return reach.distinct()
 
 

@@ -42,44 +42,16 @@ def loop_partitions(n_rows: int) -> int:
     return max(8, min(10_000, -(-n_rows // 1_000_000)))
 
 
-def rehome(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Re-resolve a checkpoint-backed clone-session DataFrame in
-    ``spark`` (normally the loop's parent session).
-
-    A kernel that returns the loop result as-is hands its caller a
-    frame whose ``sparkSession`` is the tuned clone — and the clone's
-    confs (AQE off, loop-sized shuffle partitions) outlive the
-    ``with`` block, so any DOWNSTREAM plan composed on that frame and
-    executed from it silently runs under loop confs. Harmless for
-    terminal top-k selects (measured faster, even), but a composed
-    consumer (e.g. the memoized Louvain L1 labels feeding the
-    two-level query) loses AQE for its own heavy joins — measured
-    +3.3 s on g_louvain_two_level. The frame is localCheckpoint-backed
-    by loop exit, so re-resolving it through a short-lived global temp
-    view yields the same LogicalRDD under the parent's confs."""
-    name = f"erkg_rehome_{uuid.uuid4().hex}"
-    df.createOrReplaceGlobalTempView(name)
-    out = spark.table(f"global_temp.{name}")
-    out.schema  # force analysis before the view goes away
-    spark.catalog.dropGlobalTempView(name)
-    return out
-
-
 @contextmanager
 def tuned_loop_session(
-    spark: SparkSession, n_rows: int, enabled: bool = True
+    spark: SparkSession, n_rows: int
 ) -> Iterator[tuple[SparkSession, Callable[[DataFrame], DataFrame]]]:
     """Yield ``(loop_session, rebind)`` for an iterative loop body.
 
     ``loop_session`` has AQE off and shuffle partitions sized for
     ``n_rows`` per-round rows; ``rebind(df)`` re-homes a parent-session
-    DataFrame into it. With ``enabled=False`` both are pass-throughs
-    (the parent session itself, identity).
+    DataFrame into it.
     """
-    if not enabled:
-        yield spark, (lambda df: df)
-        return
-
     clone = spark.newSession()
     clone.conf.set("spark.sql.adaptive.enabled", "false")
     clone.conf.set("spark.sql.shuffle.partitions", str(loop_partitions(n_rows)))

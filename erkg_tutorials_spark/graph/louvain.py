@@ -69,9 +69,9 @@ def louvain_one_level(
     # and rejected on measurement. It wins the COLD build (isolated
     # best-of-3 at sf0.1: g_louvain_communities cold 18.3→15.1 s) but
     # this result is memoized (louvain_l1_labels) and composed into
-    # g_louvain_two_level's joins, and even with the result re-homed
-    # to the parent session (loop_confs.rehome) the two-level query's
-    # HOT path regressed 7.0→11.4 s against the A/B worktree — more
+    # g_louvain_two_level's joins, and even with the result re-resolved
+    # in the parent session (through a global temp view) the two-level
+    # query's HOT path regressed 7.0→11.4 s against the A/B worktree — more
     # than the cold win. Kept on AQE deliberately (guide §1.2 —
     # measure, then pick); the wrap stays on the kernels where the
     # isolated A/B shows a win (betweenness, coloring, k-core, MIS,

@@ -1,7 +1,7 @@
 """G5 (substrate) — PageRank as iterative DataFrame joins.
 
 No GraphFrames dependency: each iteration is
-``ranks ⋈ out-degrees ⋈ edges → groupBy(dst).sum`` plus the standard
+``ranks ⋈ degree-joined edges → groupBy(dst).sum`` plus the standard
 damping + dangling-mass redistribution, i.e. exactly the shuffle
 pattern GraphX's Pregel would produce, but expressed declaratively so
 Catalyst/AQE manage partitioning and skew. This is a MEASURED choice,
@@ -11,10 +11,22 @@ not an assumption: the r10/r11 A/Bs (tools/graphx_ab.py, SCALING.md
 wins below the measured crossover, and above it (GRAPHX_MIN_EDGES)
 pagerank() ROUTES to GraphX for the provably-shared semantics.
 
+One loop body (:func:`_iterate`) serves every variant — global,
+namespaced, weighted and personalized. They differ only in |V| (a
+driver scalar or a per-row ``n`` column), the per-edge share
+(``rank/out_deg`` or ``(rank*w)/w_total``), the dangling mass (none, a
+broadcast scalar or a per-namespace sum) and the restart/dangling
+scaling (``x/n`` or ``x*tp``). The loop builds each from column
+expressions the variant passes in or the tables carry, so every
+variant keeps its own IEEE expression tree.
+
 Scale notes: ranks and degrees are keyed by vertex id — co-partitioned
-across iterations after the first shuffle; ``localCheckpoint`` every
-few rounds truncates the growing lineage (the classic iterative-algo
-failure mode at scale).
+across iterations after the first shuffle; the rank state is
+``localCheckpoint``-ed every round, which truncates the growing lineage
+(the classic iterative-algo failure mode at scale). Longer spans were
+measured slower: each uncheckpointed round re-executes its
+predecessors through the broadcast rank subtree (SCALING.md "PPR
+checkpoint cadence").
 
 Supports composite graph namespaces (e.g. per-document token graphs
 for TextRank) via ``namespace_col``: PageRank then runs independently
@@ -25,8 +37,9 @@ driver loop.
 from __future__ import annotations
 
 import os
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.graph.loop_confs import (
@@ -51,63 +64,128 @@ def _graphx_min_edges() -> int:
     return int(v) if v not in (None, "") else GRAPHX_MIN_EDGES
 
 
-def with_vertex_count(base: DataFrame, ns: list[str]) -> DataFrame:
-    """Annotate each vertex row with its (per-namespace) vertex count.
+def graph_invariants(
+    e: DataFrame, ns: Sequence[str] = (), symmetric: bool = False
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(verts, e_deg, danglers) — the loop-invariant tables of every
+    PageRank-family loop, as lazy plans (callers pick the cache or
+    memo policy).
 
-    Namespaced (per-doc) graphs use a partitioned window — each
-    partition is one small document graph. Un-namespaced graphs use a
-    broadcast scalar crossJoin: ``Window.partitionBy()`` with no keys
-    would drag all |V| rows through ONE task at 100× scale."""
+    ``e`` = (*ns, src, dst[, w]). Namespaced verts carry their
+    per-namespace vertex count ``n``. The danglers are derived from
+    those same verts, so a caller that caches verts first has the
+    danglers build read — and materialize — that cache, and the loop
+    plans its first round against the measured verts size.
+
+    With a ``w`` column the per-edge degree is GDS relationshipWeight
+    semantics: ``w_total`` = the source's total positive weight, and
+    ``w`` AND ``w_total`` both stay on the edge table so the loop
+    evaluates ``(rank*w)/w_total`` — the oracle's exact expression
+    tree, not a precomputed share (the ulp-level divergence per edge
+    would compound over the iterations).
+    Null/zero/negative edges are dropped, so a vertex whose every
+    out-edge is non-positive carries no transition and is a dangler.
+    The per-edge degree is joined onto the edge table HERE, once — each
+    iteration then needs a single ranks ⋈ edges join, not two.
+
+    ``symmetric`` asserts the (positive-weight) edge list is mirrored:
+    every vertex then has an out-edge, so the out-degree KEY SET is the
+    vertex set (a projection of the |V|-row degree table instead of a
+    distinct-union pass over 2|E| rows) and the danglers table is empty
+    by construction — an empty frame, no anti-join. A wrong
+    assertion DROPS vertices; make it only where symmetry is structural
+    (mirrored unions).
+    """
+    ns = list(ns)
+    if "w" in e.columns:
+        e_pos = e.filter(F.col("w") > 0)
+        out_deg = e_pos.groupBy(*ns, "src").agg(F.sum("w").alias("w_total"))
+    else:
+        e_pos = e
+        out_deg = e.groupBy(*ns, "src").agg(F.count("*").alias("out_deg"))
+    e_deg = e_pos.join(out_deg, ns + ["src"])
+    src_ids = out_deg.select(*ns, F.col("src").alias("id"))
+    if symmetric:
+        verts = src_ids
+    else:
+        verts = (
+            e.select(*ns, F.col("src").alias("id"))
+            .unionByName(e.select(*ns, F.col("dst").alias("id")))
+            .distinct()
+        )
     if ns:
-        return base.withColumn("n", F.count("*").over(Window.partitionBy(*ns)))
-    return base.crossJoin(F.broadcast(base.agg(F.count("*").alias("n"))))
+        # a window partitioned by namespace: each partition is one small
+        # document graph. Un-namespaced graphs count |V| driver-side — a
+        # keyless Window.partitionBy() would drag all |V| rows through
+        # ONE task at 100x scale
+        verts = verts.withColumn("n", F.count("*").over(Window.partitionBy(*ns)))
+    if symmetric:
+        # empty by construction; limit(0) plans as an empty local
+        # relation, so probing or joining it runs no job
+        danglers = src_ids.limit(0)
+    else:
+        # dangling = vertices with no out-edges; loop-invariant. Per
+        # iteration their mass is a sum over the O(|V|) rank state — NOT
+        # a second pass over the O(|E|) contribs (1 - sum(contrib) is the
+        # same number, but forces the edge scan + aggregation to run twice)
+        danglers = verts.select(*ns, "id").join(src_ids, ns + ["id"], "left_anti")
+    return verts, e_deg, danglers
+
+
+def teleport_vector(seeds: DataFrame, verts: DataFrame) -> DataFrame:
+    """(id, tp) over EVERY vertex: 1/|S∩V| on the seeds, 0.0 elsewhere.
+    Seeds not in the graph are dropped before the 1/|S| weighting, so
+    the vector always sums to 1. The seed id is ``seeds``' first
+    column."""
+    s = (
+        seeds.select(F.col(seeds.columns[0]).alias("id"))
+        .distinct()
+        .join(verts, ["id"], "left_semi")
+    )
+    n_seeds = s.agg(F.count("*").alias("ns"))
+    tp_seed = s.crossJoin(F.broadcast(n_seeds)).select(
+        "id", (F.lit(1.0) / F.col("ns")).alias("tp")
+    )
+    return verts.join(tp_seed, ["id"], "left").select(
+        "id", F.coalesce("tp", F.lit(0.0)).alias("tp")
+    )
 
 
 def pagerank(
     edges: DataFrame,
     reset: float = 0.15,
     max_iter: int = 10,
-    src: str = "src",
-    dst: str = "dst",
     namespace_col: str | None = None,
-    checkpoint_every: int = 1,
-    broadcast_ranks: bool | None = None,
-    tune_loop_confs: bool = True,
     pre: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     init_ranks: DataFrame | None = None,
     weight: str | None = None,
-    inedges_complete: bool | None = None,
+    symmetric: bool = False,
 ) -> DataFrame:
     """Returns (``[namespace,] id, rank``); ranks sum to 1 per namespace.
 
-    ``pre`` = (verts(id), e_deg(src, dst, out_deg), danglers(id)),
-    already materialized by the caller (session-memo pattern — the
-    same tables serve every PageRank-family query over one graph).
-    Only valid without ``namespace_col``; the caller owns their
-    lifecycle. The loop math is identical either way — the tables
-    are the same expressions, just built once.
+    ``edges`` = (src, dst[, namespace_col][, weight]).
+
+    ``pre`` = (verts(id), e_deg(src, dst, out_deg), danglers(id)), as
+    built by :func:`graph_invariants` and materialized by the caller
+    (session-memo pattern — the same tables serve every PageRank-family
+    query over one graph). Only valid without ``namespace_col`` and
+    ``weight``; the caller owns their lifecycle.
 
     Standard damped PageRank with dangling-node mass redistributed
-    uniformly (networkx semantics, which pytextrank inherits —
-    /root/reference poetry.lock:3893 pins pytextrank 3.3.0).
+    uniformly (networkx semantics, which pytextrank inherits — the
+    reference project's poetry.lock pins pytextrank 3.3.0).
 
-    ``tune_loop_confs`` (measured 11.3s → 4.6s on the sf0.1 trade
-    graph): inside the loop, AQE is disabled and the shuffle partition
-    count is derived from the materialized edge count — every
-    iteration has the SAME known shapes, so AQE's per-iteration
-    re-planning/compile is pure driver overhead, and its coalescing
-    fights the size-derived partitioning. Skew stays handled: the only
-    per-iteration shuffle is the contrib sum, which partial-aggregates
-    map-side before the exchange (hub vertices arrive pre-combined).
-    The tuned confs live on a cloned session (graph/loop_confs.py) —
-    concurrent queries on the caller's session are unaffected.
+    ``init_ranks`` warm-starts the iteration (incremental maintenance):
+    a prior rank vector carried into the new graph; vertices the prior
+    never saw start at the uniform mass. The damped iteration contracts
+    toward the new fixpoint from ANY start — a warm one just needs
+    fewer rounds per maintenance batch.
 
-    ``inedges_complete`` (un-namespaced only): True asserts every
-    vertex has at least one in-edge (true for any mirrored/symmetric
-    edge list), letting the loop skip the per-iteration verts
-    left-join; None (default) probes it once per call; False forces
-    the join. A wrong True would DROP in-edge-less vertices from the
-    output — assert it only where symmetry is structural.
+    ``symmetric`` asserts the edge list is mirrored (see
+    :func:`graph_invariants`). Besides the cheaper invariants it tells
+    the loop every vertex has an in-edge, so the per-iteration verts
+    left-join is skipped without the one-off probe that otherwise
+    decides it (un-namespaced graphs only).
     """
     ns = [namespace_col] if namespace_col else []
     if pre is not None and ns:
@@ -115,211 +193,245 @@ def pagerank(
     if pre is not None and weight:
         raise ValueError("pre-built invariants are unweighted; pass edges")
     wcols = [F.col(weight).alias("w")] if weight else []
-    e = edges.select(
-        *ns, F.col(src).alias("src"), F.col(dst).alias("dst"), *wcols
-    )
+    e = edges.select(*ns, "src", "dst", *wcols)
 
-    if pre is not None:
-        verts, e_deg, danglers = pre
-    else:
-        verts = (
-            e.select(*ns, F.col("src").alias("id"))
-            .unionByName(e.select(*ns, F.col("dst").alias("id")))
-            .distinct()
-        )
-        if ns:
-            verts = with_vertex_count(verts, ns).cache()
-        else:
-            # un-namespaced: |V| is ONE scalar — it is counted driver-side
-            # below instead of riding every row as an `n` column, which
-            # removes the per-call crossJoin overlay cache and the
-            # per-iteration broadcast that re-derived it (r13: the loop's
-            # per-iteration fixed cost was task/broadcast overhead, not
-            # data — see _pagerank_loop_flat)
-            verts = verts.cache()
-
+    owned: list[DataFrame] = []
+    if pre is None:
         # loop-invariant tables: materialize once, reuse every iteration
         # (without this each iteration re-derives them from the source
         # scan, re-broadcasting fresh copies — the accumulated broadcasts
-        # are what blow a small driver heap long before the data does).
-        # The per-edge out-degree is joined onto the edge table HERE,
-        # once — each iteration then needs a single ranks ⋈ edges join,
-        # not two.
-        if weight:
-            # GDS relationshipWeight semantics: a neighbor's share of
-            # the rank is its edge weight over the source's total
-            # weight. GDS requires positive weights — null/zero/negative
-            # edges are dropped here, so a vertex whose every out-edge
-            # is non-positive carries no transition and falls into the
-            # danglers set via the anti-join below (rather than
-            # propagating NaN ranks). w and w_total are BOTH kept on
-            # the edge table: the loop evaluates (rank*w)/w_total —
-            # the oracle's exact expression tree — not a precomputed
-            # share (the ulp-level divergence per edge would compound
-            # over the iterations).
-            e_pos = e.filter(F.col("w") > 0)
-            out_deg = e_pos.groupBy(*ns, "src").agg(
-                F.sum("w").alias("w_total")
-            )
-            e_deg = e_pos.join(out_deg, ns + ["src"]).cache()
-        else:
-            out_deg = e.groupBy(*ns, "src").agg(
-                F.count("*").alias("out_deg")
-            )
-            e_deg = e.join(out_deg, ns + ["src"]).cache()
-        # dangling = vertices with no out-edges; loop-invariant. Per
-        # iteration their mass is a sum over the O(|V|) rank state — NOT
-        # a second pass over the O(|E|) contribs (1 - sum(contrib) is the
-        # same number, but forces the edge scan + aggregation to run
-        # twice per iteration).
-        danglers = (
-            verts.select(*ns, "id")
-            .join(
-                out_deg.select(*ns, F.col("src").alias("id")),
-                ns + ["id"],
-                "left_anti",
-            )
-            .cache()
-        )
-    # un-namespaced: |V| as a driver-side scalar. float(n_verts) is exact
-    # (counts < 2^53) and lit(1.0)/lit(n) is the same IEEE division the
-    # former per-row `1.0 / col(n)` performed, so ranks are bit-identical.
-    n_verts = None if ns else verts.count()
-    inv_n = None if ns else (F.lit(1.0) / F.lit(float(n_verts)))
+        # are what blow a small driver heap long before the data does)
+        pre = owned = [df.cache() for df in graph_invariants(e, ns, symmetric)]
+    verts, e_deg, danglers = pre
+
+    if ns:
+        carry, n_verts, n = ["n"], None, F.col("n")
+    else:
+        # un-namespaced: |V| is ONE scalar, counted driver-side instead
+        # of riding every row as an `n` column. float(n_verts) is exact
+        # (counts < 2^53), and lit(n) keeps the DIVISION form x / n
+        # (never x * (1/n) — the two differ in the last ulp)
+        carry, n_verts = [], verts.count()
+        n = F.lit(float(n_verts))
+
+    def share(x: Column) -> Column:
+        return x / n
+
+    uniform = share(F.lit(1.0))
     if init_ranks is not None:
-        # warm start (incremental maintenance): carry a prior rank
-        # vector into the new graph; vertices the prior never saw
-        # start at the uniform mass. The damped iteration contracts
-        # toward the new fixpoint from ANY start — a warm one just
-        # needs fewer rounds per maintenance batch.
         ranks = verts.join(
-            init_ranks.select(
-                *ns, "id", F.col("rank").alias("rank0")
-            ),
+            init_ranks.select(*ns, "id", F.col("rank").alias("rank0")),
             ns + ["id"],
             "left",
-        ).select(
-            *ns,
-            "id",
-            *([] if not ns else ["n"]),
-            F.coalesce(
-                "rank0", inv_n if not ns else F.lit(1.0) / F.col("n")
-            ).alias("rank"),
-        )
-    elif ns:
-        ranks = verts.select(
-            *ns, "id", "n", (F.lit(1.0) / F.col("n")).alias("rank")
-        )
+        ).select(*ns, "id", *carry, F.coalesce("rank0", uniform).alias("rank"))
     else:
-        ranks = verts.select("id", inv_n.alias("rank"))
+        ranks = verts.select(*ns, "id", *carry, uniform.alias("rank"))
 
-    # global graphs: |ranks| = |V| ≪ |E| — broadcasting the rank vector
-    # makes each iteration's rank⋈edges a map-side join over the cached
-    # edge table; the only shuffle left per iteration is the contrib
-    # aggregation (PageRank's irreducible message traffic). Namespaced
-    # (per-doc) graphs default to the shuffle join — there the rank
-    # table is the full token×doc set and may exceed broadcast limits —
-    # but callers ranking a bounded doc set can opt in.
-    if broadcast_ranks is None:
-        # default follows the family-wide hint knob (graph/hints.py):
-        # force-disabled hints co-shuffle the rank⋈edges join on the
-        # vertex key instead (an explicit broadcast_ranks=True from
-        # the caller still wins — it is API, not a default)
-        from erkg_tutorials_spark.graph.hints import hints_enabled
+    route = None
+    if not ns and weight is None and init_ranks is None:
 
-        broadcast_ranks = (not ns) and hints_enabled()
-    bcast = (lambda df: F.broadcast(df)) if broadcast_ranks else (lambda df: df)
+        def route() -> DataFrame:
+            return _pagerank_graphx(e, verts, n_verts, reset, max_iter)
 
-    spark = edges.sparkSession
+    return _iterate(
+        ranks, verts, e_deg, danglers, owned,
+        ns=ns, carry=carry, share=share, reset=reset, max_iter=max_iter,
+        symmetric=symmetric, route=route,
+    )
+
+
+def personalized_pagerank(
+    edges: DataFrame,
+    seeds: DataFrame,
+    reset: float = 0.15,
+    max_iter: int = 10,
+    pre: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    tp: DataFrame | None = None,
+) -> DataFrame:
+    """Returns (id, rank): random-walk-with-restart scores.
+
+    ``pre`` = caller-materialized (verts, e_deg, danglers), exactly as
+    in pagerank() — the graph invariants don't depend on the seed set,
+    so one memoized build serves every watchlist.
+
+    ``tp`` = caller-materialized :func:`teleport_vector`. A watchlist's
+    teleport vector is an index artifact like the degree-joined edge
+    table: deriving it costs three driver-visible jobs (seed semi-join,
+    |S| count, vertex left join) that repeat on every call, so repeated
+    scoring against one watchlist should memoize it. When given,
+    ``seeds`` is ignored.
+
+    networkx ``personalization=`` semantics (the reference's TextRank
+    stack rides on networkx PageRank — poetry.lock:3893): the teleport
+    distribution is uniform over the seed set instead of over all
+    vertices, and dangling mass is redistributed to the seeds — the
+    shared loop with restart and dangling terms ``x * tp`` in place of
+    ``x / n``.
+    """
+    owned: list[DataFrame] = []
+    if pre is None:
+        pre = owned = [
+            df.cache() for df in graph_invariants(edges.select("src", "dst"))
+        ]
+    verts, e_deg, danglers = pre
+    if tp is None:
+        tp = teleport_vector(seeds, verts).cache()
+        owned = [*owned, tp]
+    else:
+        tp = tp.select("id", "tp")
+
+    def share(x: Column) -> Column:
+        return x * F.col("tp")
+
+    return _iterate(
+        tp.select("id", "tp", F.col("tp").alias("rank")),
+        tp, e_deg, danglers, owned,
+        ns=[], carry=["tp"], share=share, reset=reset, max_iter=max_iter,
+    )
+
+
+def _iterate(
+    ranks: DataFrame,
+    verts: DataFrame,
+    e_deg: DataFrame,
+    danglers: DataFrame,
+    owned: list[DataFrame],
+    *,
+    ns: list[str],
+    carry: list[str],
+    share: Callable[[Column], Column],
+    reset: float,
+    max_iter: int,
+    symmetric: bool = False,
+    route: Callable[[], DataFrame] | None = None,
+) -> DataFrame:
+    """The one rank-update loop and its prologue, for every variant.
+
+    ``verts`` is the vertex table the contribs are left-joined onto —
+    it carries the per-vertex ``carry`` columns (``n`` for namespaced
+    graphs, ``tp`` for personalized ones) that ``share`` reads; ``share``
+    turns a mass (the restart probability, a dangling sum) into this
+    vertex's part of it. ``owned`` are the tables this call cached and
+    frees on exit (caller-owned ``pre`` / ``tp`` tables are left alone).
+
+    Loop confs (measured 11.3s → 4.6s on the sf0.1 trade graph): inside
+    the loop, AQE is disabled and the shuffle partition count is derived
+    from the materialized edge count — every iteration has the SAME
+    known shapes, so AQE's per-iteration re-planning/compile is pure
+    driver overhead, and its coalescing fights the size-derived
+    partitioning. Skew stays handled: the only per-iteration shuffle is
+    the contrib sum, which partial-aggregates map-side before the
+    exchange (hub vertices arrive pre-combined). The tuned confs live on
+    a cloned session (graph/loop_confs.py) — concurrent queries on the
+    caller's session are unaffected.
+    """
+    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
+    from erkg_tutorials_spark.graph.hints import hints_enabled
+
     # materializing the cached e_deg (the biggest shuffle, run at
     # session confs so AQE still shapes it) doubles as the loop sizing
-    # count (loop_confs.loop_partitions). The tuned confs live on a
-    # cloned session — the caller's session is never mutated, so
-    # concurrent queries on it keep their plans.
-    # the GraphX route must see the real edge count even when loop
-    # tuning is off (the guard used to reuse the tuning count and
-    # silently skipped the route for tune_loop_confs=False callers) —
-    # e_deg is cached, so the extra count just materializes the table
-    # the loop or the route's edge join reads anyway
-    may_route = not ns and weight is None and init_ranks is None
-    n_edges = e_deg.count() if (tune_loop_confs or may_route) else 0
+    # count (loop_confs.loop_partitions) and the GraphX route guard
+    n_edges = e_deg.count()
     # measured routing (module header): above the crossover, the
     # dangler-free/unweighted/cold-start case runs on classpath GraphX
-    if (
-        may_route
-        and n_edges >= _graphx_min_edges()
-        and danglers.isEmpty()
-    ):
-        out = _pagerank_graphx(e, verts, n_verts, reset, max_iter)
-        if pre is None:
-            e_deg.unpersist()
-            danglers.unpersist()
-            verts.unpersist()
-        return out
-    with tuned_loop_session(spark, n_edges, enabled=tune_loop_confs) as (
-        _loop,
-        rebind,
-    ):
-        ranks, verts_l, e_deg_l, danglers_l = (
-            rebind(ranks), rebind(verts), rebind(e_deg), rebind(danglers),
+    if route is not None and n_edges >= _graphx_min_edges() and danglers.isEmpty():
+        out = route()
+    else:
+        keys = ns + ["id"]
+        # global graphs: |ranks| = |V| ≪ |E| — broadcasting the rank
+        # vector makes each iteration's rank⋈edges a map-side join over
+        # the cached edge table; the only shuffle left per iteration is
+        # the contrib aggregation (PageRank's irreducible message
+        # traffic). Namespaced (per-doc) graphs shuffle-join: there the
+        # rank table is the full token×doc set, and on the bounded
+        # TextRank doc set a broadcast was measured slower (its
+        # per-iteration build jobs outweigh the tiny shuffle). The
+        # family-wide hint knob (graph/hints.py) force-disables it.
+        bcast = F.broadcast if not ns and hints_enabled() else (lambda df: df)
+        per_edge = (
+            (F.col("rank") * F.col("w")) / F.col("w_total")
+            if "w_total" in e_deg.columns
+            else F.col("rank") / F.col("out_deg")
         )
-        if tune_loop_confs:
+        with tuned_loop_session(e_deg.sparkSession, n_edges) as (_loop, rebind):
             # loop-invariant caches keep their PARENT-session layout
-            # (scan/AQE-shaped — 64+ tiny partitions for a table the
-            # loop sizing puts at loop_partitions(n) ≈ 8 locally), and
-            # every iteration re-reads them: the per-iteration fixed
-            # cost was dominated by task count, not data (r13 timeline
-            # probe: ~280 tasks/iteration at sf0.1, ≥90% of them
-            # sub-10 ms cache-scan tasks). coalesce() is a narrow
-            # merge-at-read — no shuffle, no extra materialization —
-            # that sizes every loop-side read to the loop's own
-            # partitioning. Scale-adaptive by construction: P grows
-            # with the measured edge count.
+            # (scan/AQE-shaped — 64+ tiny partitions for a table the loop
+            # sizing puts at loop_partitions(n) ≈ 8 locally), and every
+            # iteration re-reads them: the per-iteration fixed cost was
+            # dominated by task count, not data (r13 timeline probe: ~280
+            # tasks/iteration at sf0.1, ≥90% of them sub-10 ms cache-scan
+            # tasks). coalesce() is a narrow merge-at-read — no shuffle,
+            # no extra materialization — that sizes every loop-side read
+            # to the loop's own partitioning, growing with the edge count.
             p_loop = loop_partitions(n_edges)
-            e_deg_l = e_deg_l.coalesce(p_loop)
-            verts_l = verts_l.coalesce(p_loop)
-            danglers_l = danglers_l.coalesce(p_loop)
-        # symmetric graphs (bidirectional edge lists, co-occurrence
-        # graphs) have no dangling vertices at all — one cheap pre-loop
-        # check (inside the tuned window: its shapes are the loop's
-        # shapes) skips the per-iteration dangling agg + broadcast
-        has_danglers = not danglers_l.isEmpty()
-        if ns:
-            ranks = _pagerank_loop(
-                ranks, verts_l, e_deg_l, danglers_l, has_danglers, ns,
-                reset, max_iter, checkpoint_every, bcast,
+            ranks = rebind(ranks)
+            verts, e_deg, danglers = (
+                rebind(df).coalesce(p_loop) for df in (verts, e_deg, danglers)
             )
-        else:
-            # every-vertex-receives-mass check: when each vertex has at
-            # least one in-edge, the contrib aggregation's key set IS
-            # the vertex set, so the per-iteration verts left-join (and
-            # its broadcast rebuild of the vertex table every round) is
-            # the identity and is skipped. Callers that know the graph
-            # is symmetric (every edge list here is mirrored) assert it
-            # via inedges_complete=True; None probes once per call with
-            # an anti-join at loop shapes. A WRONG True would drop
-            # in-edge-less vertices from the output — asserted only
-            # where symmetry is structural (mirrored unions).
-            complete = inedges_complete
-            if complete is None:
-                complete = verts_l.join(
-                    e_deg_l.select(F.col("dst").alias("id")),
-                    ["id"],
-                    "left_anti",
+            # graphs without dangling vertices (every symmetric one) skip
+            # the per-iteration dangling agg + broadcast; one cheap probe
+            # inside the tuned window, whose shapes are the loop's shapes
+            has_danglers = not danglers.isEmpty()
+            # every-vertex-receives-mass: when each vertex has an in-edge
+            # the contrib aggregation's key set IS the vertex set, so the
+            # per-iteration verts left-join is the identity and is
+            # skipped — unless the join carries a per-vertex column.
+            # Asserted by symmetric callers, else probed once per call
+            join_verts = bool(carry) or not (
+                symmetric
+                or verts.join(
+                    e_deg.select(F.col("dst").alias("id")), ["id"], "left_anti"
                 ).isEmpty()
-            ranks = _pagerank_loop_flat(
-                ranks, verts_l, e_deg_l, danglers_l, has_danglers,
-                complete, n_verts, reset, max_iter, checkpoint_every,
-                bcast,
             )
-    out = ranks.select(*ns, "id", "rank")
+            chain = CheckpointChain()
+            for _ in range(max_iter):
+                contribs = (
+                    bcast(ranks.select(*ns, F.col("id").alias("src"), "rank"))
+                    .join(e_deg, ns + ["src"])
+                    .select(*ns, F.col("dst").alias("id"), per_edge.alias("c"))
+                    .groupBy(*keys)
+                    .agg(F.sum("c").alias("contrib"))
+                )
+                base = verts.join(contribs, keys, "left") if join_verts else contribs
+                dangling = F.lit(0.0)
+                if has_danglers:
+                    mass = ranks.join(danglers, keys, "left_semi")
+                    if ns:
+                        base = base.join(
+                            mass.groupBy(*ns).agg(F.sum("rank").alias("dangling")),
+                            ns,
+                            "left",
+                        )
+                    else:
+                        # agg on a (possibly empty) semi-join yields one row
+                        base = base.crossJoin(
+                            F.broadcast(
+                                mass.agg(
+                                    F.coalesce(F.sum("rank"), F.lit(0.0))
+                                    .alias("dangling")
+                                )
+                            )
+                        )
+                    dangling = F.coalesce(F.col("dangling"), F.lit(0.0))
+                # eager per-iteration checkpoint: the rank state is O(|V|)
+                # rows, but the *plan* doubles every uncheckpointed round.
+                # The chain frees round i-1's blocks as round i lands.
+                ranks = chain(
+                    base.select(
+                        *keys,
+                        *carry,
+                        (
+                            share(F.lit(reset))
+                            + F.lit(1.0 - reset)
+                            * (F.coalesce(F.col("contrib"), F.lit(0.0)) + share(dangling))
+                        ).alias("rank"),
+                    )
+                )
+        out = ranks.select(*keys, "rank")
     # the returned frame is checkpoint-backed; the loop-invariant caches
-    # are no longer needed by its lineage (caller-owned `pre` tables are
-    # left alone)
-    if pre is None:
-        e_deg.unpersist()
-        danglers.unpersist()
-        verts.unpersist()
+    # are no longer needed by its lineage
+    for df in owned:
+        df.unpersist()
     return out
 
 
@@ -389,271 +501,4 @@ def _pagerank_graphx(e, verts, n_verts, reset: float, max_iter: int) -> DataFram
     # checkpoint above already materialized everything we return.
     ranked.unpersist(False)
     g.unpersist(False)
-    return out
-
-
-def _pagerank_loop(
-    ranks, verts, e_deg, danglers, has_danglers, ns, reset,
-    max_iter, checkpoint_every, bcast,
-):
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-
-    chain = CheckpointChain()
-    join_keys = ns + ["id"]
-    for i in range(max_iter):
-        r_src = ranks.select(*ns, F.col("id").alias("src"), "rank")
-        per_edge = (
-            ((F.col("rank") * F.col("w")) / F.col("w_total"))
-            if "w_total" in e_deg.columns
-            else (F.col("rank") / F.col("out_deg"))
-        )
-        contribs = (
-            bcast(r_src).join(e_deg, ns + ["src"])
-            .select(*ns, F.col("dst").alias("id"), per_edge.alias("c"))
-            .groupBy(*ns, "id")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        base = verts.join(contribs, join_keys, "left")
-        if not has_danglers:
-            base = base.withColumn("dangling", F.lit(0.0))
-        elif ns:
-            dangling = (
-                ranks.join(danglers, join_keys, "left_semi")
-                .groupBy(*ns)
-                .agg(F.sum("rank").alias("dangling"))
-            )
-            base = base.join(dangling, ns, "left")
-        else:
-            # agg on a (possibly empty) semi-join still yields one row
-            dangling = ranks.join(danglers, join_keys, "left_semi").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
-            )
-            base = base.crossJoin(F.broadcast(dangling))
-        ranks = base.select(
-            *ns,
-            "id",
-            "n",
-            (
-                F.lit(reset) / F.col("n")
-                + F.lit(1.0 - reset)
-                * (
-                    F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.coalesce(F.col("dangling"), F.lit(0.0)) / F.col("n")
-                )
-            ).alias("rank"),
-        )
-        # eager per-iteration checkpoint: the rank state is O(|V|) rows,
-        # but the *plan* doubles every uncheckpointed round — AQE
-        # re-compilation + codegen of the nested join tree is the
-        # scaling hazard, not the data. checkpoint_every > 1 trades
-        # driver-side plan size for fewer materialization barriers.
-        # The chain frees round i-1's blocks as round i materializes.
-        if (i + 1) % checkpoint_every == 0 or i == max_iter - 1:
-            ranks = chain(ranks)
-    return ranks
-
-
-def _pagerank_loop_flat(
-    ranks, verts, e_deg, danglers, has_danglers, complete, n_verts,
-    reset, max_iter, checkpoint_every, bcast,
-):
-    """Un-namespaced loop body: |V| is the driver-side scalar
-    ``n_verts`` (no per-row ``n`` column, no per-iteration rebuild of
-    the count crossJoin), and when ``complete`` — every vertex has an
-    in-edge, e.g. any mirrored/symmetric edge list — the contrib
-    aggregation's key set is exactly the vertex set, so the verts
-    left-join drops out of the iteration entirely. Rank expressions
-    evaluate the same IEEE operations on the same values as
-    :func:`_pagerank_loop` (checked bit-identical by
-    tests/test_graph_frames.py), the plan per round is just
-    rank⋈edges → sum — two stages and one broadcast build.
-
-    checkpoint_every stays 1 by measurement: each uncheckpointed round
-    re-executes its predecessors through the broadcast(r_src) subtree,
-    so longer spans are QUADRATIC re-work, not saved barriers (r13
-    A/B: ce=1 8.5 s, ce=3 11.6 s, ce=5 12.9 s on the sf0.1 trade
-    graph)."""
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-
-    chain = CheckpointChain()
-    # lit(n) keeps the DIVISION form of the original expressions
-    # (x / n, never x * (1/n) — the two differ in the last ulp), so
-    # every rank is the same IEEE value the column-n loop produced
-    n_lit = F.lit(float(n_verts))
-    weighted = "w_total" in e_deg.columns
-    for i in range(max_iter):
-        r_src = ranks.select(F.col("id").alias("src"), "rank")
-        per_edge = (
-            ((F.col("rank") * F.col("w")) / F.col("w_total"))
-            if weighted
-            else (F.col("rank") / F.col("out_deg"))
-        )
-        contribs = (
-            bcast(r_src).join(e_deg, ["src"])
-            .select(F.col("dst").alias("id"), per_edge.alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        base = contribs if complete else verts.join(contribs, ["id"], "left")
-        if not has_danglers:
-            dangling_term = F.lit(0.0) / n_lit
-        else:
-            dangling = ranks.join(danglers, ["id"], "left_semi").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
-            )
-            base = base.crossJoin(F.broadcast(dangling))
-            dangling_term = (
-                F.coalesce(F.col("dangling"), F.lit(0.0)) / n_lit
-            )
-        ranks = base.select(
-            "id",
-            (
-                F.lit(reset) / n_lit
-                + F.lit(1.0 - reset)
-                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dangling_term)
-            ).alias("rank"),
-        )
-        if (i + 1) % checkpoint_every == 0 or i == max_iter - 1:
-            ranks = chain(ranks)
-    return ranks
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    reset: float = 0.15,
-    max_iter: int = 10,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_every: int = 1,
-    tune_loop_confs: bool = True,
-    pre: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-    tp: DataFrame | None = None,
-) -> DataFrame:
-    """Returns (id, rank): random-walk-with-restart scores.
-
-    ``pre`` = caller-materialized (verts, e_deg, danglers), exactly as
-    in pagerank() — the graph invariants don't depend on the seed set,
-    so one memoized build serves every watchlist.
-
-    ``tp`` = caller-materialized teleport vector (id, tp) covering
-    EVERY vertex (0.0 for non-seeds, 1/|S∩V| for seeds). A watchlist's
-    teleport vector is an index artifact like the degree-joined edge
-    table: deriving it costs three driver-visible jobs (seed semi-join,
-    |S| count, vertex left join) that repeat on every call, so
-    repeated scoring against one watchlist should memoize it. When
-    given, ``seeds`` is ignored.
-
-    networkx ``personalization=`` semantics (the reference's TextRank
-    stack rides on networkx PageRank — poetry.lock:3893): the teleport
-    distribution is uniform over the seed set instead of over all
-    vertices, and dangling mass is redistributed to the seeds. Seeds
-    not present in the graph are dropped before the 1/|S| weighting so
-    the teleport vector always sums to 1.
-
-    The loop shape matches pagerank(): loop-invariant degree-joined
-    edge table and teleport vector cached once, broadcast rank vector
-    (global graph: |V| ≪ |E|), one contrib-sum shuffle per iteration,
-    tuned cloned-session confs, eager checkpoints. Kept as a separate
-    loop rather than a pagerank() parameter so the uniform path's
-    float expressions stay bit-identical to its existing oracles.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if pre is not None:
-        verts, e_deg, danglers = pre
-    else:
-        verts = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-            .cache()
-        )
-        out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-        e_deg = e.join(out_deg, ["src"]).cache()
-        danglers = (
-            verts.join(out_deg.select(F.col("src").alias("id")), ["id"], "left_anti")
-            .cache()
-        )
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-
-    chain = CheckpointChain()
-    if tp is not None:
-        verts_tp = tp.select("id", "tp")
-        owns_tp = False
-    else:
-        s = (
-            seeds.select(F.col(seeds.columns[0]).alias("id"))
-            .distinct()
-            .join(verts, ["id"], "left_semi")
-        )
-        n_seeds = s.agg(F.count("*").alias("ns"))
-        tp_seed = s.crossJoin(F.broadcast(n_seeds)).select(
-            "id", (F.lit(1.0) / F.col("ns")).alias("tp")
-        )
-        verts_tp = (
-            verts.join(tp_seed, ["id"], "left")
-            .select("id", F.coalesce("tp", F.lit(0.0)).alias("tp"))
-            .cache()
-        )
-        owns_tp = True
-    ranks = verts_tp.select("id", "tp", F.col("tp").alias("rank"))
-
-    spark = edges.sparkSession
-    n_edges = e_deg.count() if tune_loop_confs else 0
-    with tuned_loop_session(spark, n_edges, enabled=tune_loop_confs) as (
-        _loop,
-        rebind,
-    ):
-        ranks, verts_l, e_deg_l, danglers_l = (
-            rebind(ranks), rebind(verts_tp), rebind(e_deg), rebind(danglers),
-        )
-        if tune_loop_confs:
-            # size every loop-side cache read to the loop partitioning
-            # (narrow merge, no shuffle) — see pagerank() for the
-            # task-count measurement that motivates this
-            p_loop = loop_partitions(n_edges)
-            e_deg_l = e_deg_l.coalesce(p_loop)
-            verts_l = verts_l.coalesce(p_loop)
-            danglers_l = danglers_l.coalesce(p_loop)
-        has_danglers = not danglers_l.isEmpty()
-        for i in range(max_iter):
-            r_src = ranks.select(F.col("id").alias("src"), "rank")
-            contribs = (
-                F.broadcast(r_src).join(e_deg_l, ["src"])
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("out_deg")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            base = verts_l.join(contribs, ["id"], "left")
-            if has_danglers:
-                dangling = ranks.join(danglers_l, ["id"], "left_semi").agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
-                )
-                base = base.crossJoin(F.broadcast(dangling))
-            else:
-                base = base.withColumn("dangling", F.lit(0.0))
-            ranks = base.select(
-                "id",
-                "tp",
-                (
-                    F.lit(reset) * F.col("tp")
-                    + F.lit(1.0 - reset)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.coalesce(F.col("dangling"), F.lit(0.0)) * F.col("tp")
-                    )
-                ).alias("rank"),
-            )
-            if (i + 1) % checkpoint_every == 0 or i == max_iter - 1:
-                ranks = chain(ranks)
-    out = ranks.select("id", "rank")
-    if pre is None:
-        e_deg.unpersist()
-        danglers.unpersist()
-        verts.unpersist()
-    if owns_tp:
-        verts_tp.unpersist()
     return out

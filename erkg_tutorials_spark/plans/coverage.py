@@ -700,8 +700,6 @@ def textrank_top30(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"].where(F.col("doc_id") < 30).select("doc_id", "text")
-    # measured: broadcast_ranks hurts here (per-iteration broadcast
-    # build jobs outweigh the tiny shuffle they replace)
     phrases = textrank_phrases(docs, max_iter=6).withColumn(
         "rank", F.round("rank", 6)
     )

@@ -72,36 +72,21 @@ def trade_graph_invariants(spark: SparkSession, sf_dir: str):
     the loop-invariant tables every PageRank-family query (global
     PageRank, personalized PageRank) consumes. Building them per
     query re-runs the mirror + out-degree shuffles each time; here
-    they are session memos, built once per (application, sf_dir),
-    exactly like the edge table itself. danglers is empty (the graph
-    is symmetric) but stays part of the contract so the callee's
-    pre-check is honest."""
+    verts and e_deg are session memos, built once per (application,
+    sf_dir), exactly like the edge table itself. The graph is
+    symmetric, so verts is the out-degree key set and danglers is an
+    empty frame (graph/pagerank.py::graph_invariants)."""
+    from erkg_tutorials_spark.graph.pagerank import graph_invariants
     from erkg_tutorials_spark.plans.memo import memoized
 
-    e = trade_edges_sym(spark, sf_dir)
-    out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # the graph is symmetric (every vertex has out-edges), so the
-    # out-degree KEY SET is exactly the vertex set — deriving verts
-    # from it replaces the distinct-union pass over 2|E| rows with a
-    # projection of the |V|-row degree table
-    verts = memoized(
-        spark,
-        sf_dir,
-        "trade_sym_verts",
-        lambda: out_deg.select(F.col("src").alias("id")),
+    verts, e_deg, danglers = graph_invariants(
+        trade_edges_sym(spark, sf_dir), symmetric=True
     )
-    e_deg = memoized(
-        spark, sf_dir, "trade_sym_e_deg", lambda: e.join(out_deg, ["src"])
+    return (
+        memoized(spark, sf_dir, "trade_sym_verts", lambda: verts),
+        memoized(spark, sf_dir, "trade_sym_e_deg", lambda: e_deg),
+        danglers,
     )
-    danglers = memoized(
-        spark,
-        sf_dir,
-        "trade_sym_danglers",
-        lambda: verts.join(
-            out_deg.select(F.col("src").alias("id")), ["id"], "left_anti"
-        ),
-    )
-    return verts, e_deg, danglers
 
 
 def trade_edges_directed(t: dict) -> DataFrame:
@@ -280,15 +265,11 @@ def g5_pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 PageRank vertices from a checkpoint-chained DataFrame power iteration."""
     from erkg_tutorials_spark.graph.pagerank import pagerank
 
-    # checkpoint_every stays 1: measured — with the loop confs tuned
-    # (AQE off) ce=1 and ce=2 are within noise (6.3s vs 6.2s at sf0.1)
-    # and ce=4 is worse; 1 keeps the plan tree minimal
     ranks = pagerank(
         trade_edges_sym(spark, sf_dir),
         max_iter=8,
         pre=trade_graph_invariants(spark, sf_dir),
-        # the mirrored union gives every vertex an in-edge structurally
-        inedges_complete=True,
+        symmetric=True,
     )
     return (
         ranks.select("id", F.round("rank", 6).alias("rank"))
@@ -583,24 +564,16 @@ def ppr_watchlist_tp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-joined edge table): three jobs to derive, seed-set invariant
     per sf_dir — memoized so repeated scoring pays them once, and
     module-level so the bench warms it under shared_materializations
-    like its sibling invariants. Expressions identical to the original
-    in-function derivation, so the oracle's float replay is
-    unchanged."""
+    like its sibling invariants. Built by the same
+    graph/pagerank.py::teleport_vector that personalized_pagerank()
+    uses without a memo, so the oracle's float replay is unchanged."""
+    from erkg_tutorials_spark.graph.pagerank import teleport_vector
     from erkg_tutorials_spark.plans.memo import memoized
 
     def build_tp():
-        verts = trade_graph_invariants(spark, sf_dir)[0]
-        s = (
-            _ppr_watchlist_seeds(spark, sf_dir)
-            .distinct()
-            .join(verts, ["id"], "left_semi")
-        )
-        n_seeds = s.agg(F.count("*").alias("ns"))
-        tp_seed = s.crossJoin(F.broadcast(n_seeds)).select(
-            "id", (F.lit(1.0) / F.col("ns")).alias("tp")
-        )
-        return verts.join(tp_seed, ["id"], "left").select(
-            "id", F.coalesce("tp", F.lit(0.0)).alias("tp")
+        return teleport_vector(
+            _ppr_watchlist_seeds(spark, sf_dir),
+            trade_graph_invariants(spark, sf_dir)[0],
         )
 
     return memoized(spark, sf_dir, "ppr_watchlist_tp", build_tp)

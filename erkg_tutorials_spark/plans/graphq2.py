@@ -194,9 +194,9 @@ class _DatedPre:
     probe, OPTIMIZATION_r12.md). Caching the half-sized fwd table once
     and deriving everything from it makes each invariant a cheap
     in-memory agg; the mirror stays a projection (caching the union
-    would double memory, trade_edges_sym's rule). Vertex set is
-    unchanged: the graph is symmetric, so the out-degree key set IS
-    the distinct src∪dst union pagerank() would have computed.
+    would double memory, trade_edges_sym's rule). The tables come from
+    graph/pagerank.py::graph_invariants(symmetric=True): the out-degree
+    key set IS the vertex set and danglers is an empty frame.
 
     release() drops the per-run caches; safe once pagerank() returns
     (its result is eagerly checkpoint-backed by loop exit)."""
@@ -207,6 +207,7 @@ class _DatedPre:
         # dated_trade_edges_sym = fwd ∪ mirror; build the halves here
         # so only fwd is cached (mirror = projection)
         from erkg_tutorials_spark.catalog import load_tables
+        from erkg_tutorials_spark.graph.pagerank import graph_invariants
 
         t = load_tables(spark, sf_dir)
         # r13 (r12 VERDICT item 1): the caches here are re-read by every
@@ -236,21 +237,14 @@ class _DatedPre:
                 F.col("dst").alias("src"), F.col("src").alias("dst")
             )
         )
-        out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-        self.verts = out_deg.select(F.col("src").alias("id"))
-        self.e_deg = e.join(out_deg, ["src"]).cache()
-        # danglers: verts IS the out-degree key set (symmetric graph), so
-        # the anti-join of verts against itself is empty BY CONSTRUCTION —
-        # materializing it was one cached shuffle of pure wasted work
-        # (r12 VERDICT item 1). A literal-empty frame keeps the pre()
-        # contract and makes the callee's isEmpty() pre-checks free.
-        self.danglers = spark.createDataFrame([], self.verts.schema)
+        self.verts, e_deg, self.danglers = graph_invariants(e, symmetric=True)
+        self.e_deg = e_deg.cache()
 
     def pre(self):
         return self.verts, self.e_deg, self.danglers
 
     def release(self) -> None:
-        for df in (self.e_deg, self.danglers, self._fwd):
+        for df in (self.e_deg, self._fwd):
             try:
                 df.unpersist(blocking=False)
             except Exception:
@@ -270,8 +264,7 @@ def g_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpre.e_deg.select("src", "dst"),
         max_iter=PR_BASE_ITERS,
         pre=bpre.pre(),
-        # mirrored union: every vertex has an in-edge structurally
-        inedges_complete=True,
+        symmetric=True,
     )
     bpre.release()  # r_base is checkpoint-backed by loop exit
     ranks = pagerank(
@@ -279,7 +272,7 @@ def g_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_iter=PR_DELTA_ITERS,
         pre=trade_graph_invariants(spark, sf_dir),
         init_ranks=r_base,
-        inedges_complete=True,
+        symmetric=True,
     )
     return (
         ranks.select("id", F.round("rank", 6).alias("rank"))
@@ -336,7 +329,7 @@ def ensure_prbase(spark: SparkSession, sf_dir: str) -> str:
                     bpre.e_deg.select("src", "dst"),
                     max_iter=PR_BASE_ITERS,
                     pre=bpre.pre(),
-                    inedges_complete=True,
+                    symmetric=True,
                 ),
                 root,
                 mode="overwrite",
@@ -365,8 +358,7 @@ def g_pagerank_warmstart_lakehouse(
         max_iter=PR_DELTA_ITERS,
         pre=trade_graph_invariants(spark, sf_dir),
         init_ranks=read_version(spark, root),
-        # mirrored union: every vertex has an in-edge structurally
-        inedges_complete=True,
+        symmetric=True,
     )
     return (
         ranks.select("id", F.round("rank", 6).alias("rank"))
@@ -815,9 +807,9 @@ def g_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         trade_wedges_sym(spark, sf_dir),
         max_iter=WPR_ITERS,
         weight="w",
-        # mirrored union of strictly-positive count weights: every
-        # vertex keeps a positive in-edge after the w>0 filter
-        inedges_complete=True,
+        # mirrored union of strictly-positive count weights: the graph
+        # stays symmetric after the w>0 filter
+        symmetric=True,
     )
     return (
         ranks.select("id", F.round("rank", 6).alias("rank"))

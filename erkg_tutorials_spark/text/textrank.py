@@ -58,21 +58,11 @@ def textrank_phrases(
     id_col: str = "doc_id",
     window: int = 2,
     max_iter: int = 10,
-    broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """(doc_id, phrase, rank, count) — single-token phrases ranked by
-    per-doc PageRank; ``count`` is the in-doc occurrence count (A8).
-
-    ``broadcast_ranks=True`` is the right call for a bounded doc set
-    (the rank state is tokens × docs); leave default for corpus-scale
-    runs where it must shuffle."""
+    per-doc PageRank; ``count`` is the in-doc occurrence count (A8)."""
     edges = cooccurrence_edges(docs, text_col, id_col, window)
-    ranks = pagerank(
-        edges,
-        max_iter=max_iter,
-        namespace_col="doc_id",
-        broadcast_ranks=broadcast_ranks,
-    )
+    ranks = pagerank(edges, max_iter=max_iter, namespace_col="doc_id")
     counts = (
         docs.select(
             F.col(id_col).alias("doc_id"),

@@ -438,7 +438,7 @@ class TestGraphXRoute:
         # build the warm-start vector BEFORE forcing the threshold —
         # the helper call is itself the routable plain case
         monkeypatch.delenv("SPARK_GRAFT_GRAPHX_MIN_EDGES", raising=False)
-        init = prmod.pagerank(e, max_iter=1, tune_loop_confs=False)
+        init = prmod.pagerank(e, max_iter=1)
 
         monkeypatch.setenv("SPARK_GRAFT_GRAPHX_MIN_EDGES", "0")
         calls = []

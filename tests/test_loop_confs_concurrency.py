@@ -4,29 +4,10 @@ even while other queries run concurrently on it."""
 
 import threading
 
-from erkg_tutorials_spark.graph.loop_confs import rehome, tuned_loop_session
+from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
 from erkg_tutorials_spark.plans.registry import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_rehome_returns_parent_session_frame(spark):
-    """A loop result rehome()d out of the clone must carry the SAME
-    rows but belong to the parent session, so downstream plans
-    composed on it execute under the parent's confs (the r12
-    two-level-Louvain finding: a clone-bound memoized result dragged
-    AQE-off confs into consumers' joins)."""
-    with tuned_loop_session(spark, 1) as (loop, rebind):
-        df = rebind(
-            spark.range(100).selectExpr("id", "id % 7 AS k")
-        ).groupBy("k").count().localCheckpoint(eager=True)
-        assert df.sparkSession is loop
-        out = rehome(df, spark)
-    assert out.sparkSession is spark
-    assert out.sparkSession.conf.get("spark.sql.adaptive.enabled") != "false"
-    assert sorted(
-        (r["k"], r["count"]) for r in out.collect()
-    ) == sorted((r["k"], r["count"]) for r in df.collect())
 
 
 def test_loop_session_isolates_confs(spark):

@@ -240,19 +240,25 @@ class TestLinkPredictionPlans:
         assert not re.search(r"\bw#\d+", plan), plan
 
     def test_pagerank_vertex_count_no_global_window(self, spark):
-        """The un-namespaced vertex count must be a broadcast scalar
-        crossJoin, not Window.partitionBy() — an empty-key window drags
-        all |V| rows through one task. (Tested on the helper directly:
-        pagerank()'s returned plan is always a checkpointed LogicalRDD,
-        which would hide the window.)"""
-        from erkg_tutorials_spark.graph.pagerank import with_vertex_count
+        """The un-namespaced vertex count must never be a keyless
+        Window.partitionBy() — an empty-key window drags all |V| rows
+        through one task. Un-namespaced verts carry no per-row count
+        (|V| is a driver-side scalar); only namespaced verts get the
+        ``n`` window, partitioned by the namespace. (Tested on the
+        helper directly: pagerank()'s returned plan is always a
+        checkpointed LogicalRDD, which would hide the window.)"""
+        from pyspark.sql import functions as F
 
-        verts = spark.createDataFrame([(1,), (2,), (3,)], "id long")
-        plan = plan_of(with_vertex_count(verts, []))
-        assert "Window" not in plan, plan
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
+        from erkg_tutorials_spark.graph.pagerank import graph_invariants
+
+        e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+        verts = graph_invariants(e)[0]
+        assert verts.columns == ["id"]
+        assert "Window" not in plan_of(verts)
+        nsv = graph_invariants(e.withColumn("doc", F.lit(7)), ["doc"])[0]
+        assert re.search(r"windowspecdefinition\(doc#", plan_of(nsv)), plan_of(nsv)
         # and values are right
-        assert {r.n for r in with_vertex_count(verts, []).collect()} == {3}
+        assert {r.n for r in nsv.collect()} == {3}
 
     def test_hierarchy_rollup_one_exchange(self, spark):
         """Materialized-path rollup: the ancestor explosion stays in

@@ -295,7 +295,7 @@ class TestPersonalizedPageRank:
         r = {
             row.id: row.rank
             for row in personalized_pagerank(
-                self._toy(spark), seeds, max_iter=6, tune_loop_confs=False
+                self._toy(spark), seeds, max_iter=6
             ).collect()
         }
         assert abs(sum(r.values()) - 1.0) < 1e-9
@@ -304,32 +304,46 @@ class TestPersonalizedPageRank:
         assert r["a"] > r["b"] > r["c"] > 0
 
     def test_matches_numpy_power_iteration(self, spark):
-        """Independent dense recompute of the same recurrence."""
+        """Independent dense recompute of the same recurrence — on the
+        symmetric toy graph, and on a directed graph whose dangler
+        (``d``: no out-edge) sends its mass back to the seeds
+        (networkx ``personalization=`` semantics: rank += dangling·tp)."""
         from erkg_tutorials_spark.graph.pagerank import personalized_pagerank
 
-        seeds = spark.createDataFrame([("a",), ("c",)], ["id"])
-        got = {
-            row.id: row.rank
-            for row in personalized_pagerank(
-                self._toy(spark), seeds, max_iter=5, tune_loop_confs=False
-            ).collect()
-        }
-        ids = sorted(got)
-        idx = {v: i for i, v in enumerate(ids)}
-        edges = [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
-                 ("x", "y"), ("y", "x")]
-        out_deg = {}
-        for s, _ in edges:
-            out_deg[s] = out_deg.get(s, 0) + 1
-        tp = [0.5 if v in ("a", "c") else 0.0 for v in ids]
-        rank = tp[:]
-        for _ in range(5):
-            contrib = [0.0] * len(ids)
-            for s, d in edges:
-                contrib[idx[d]] += rank[idx[s]] / out_deg[s]
-            rank = [0.15 * tp[i] + 0.85 * contrib[i] for i in range(len(ids))]
-        for v in ids:
-            assert abs(got[v] - rank[idx[v]]) < 1e-9
+        cases = [
+            ([("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
+              ("x", "y"), ("y", "x")], ("a", "c")),
+            ([("a", "b"), ("b", "c"), ("b", "d"), ("c", "a"), ("e", "b")],
+             ("a", "e")),
+        ]
+        for edges, seed_ids in cases:
+            got = {
+                row.id: row.rank
+                for row in personalized_pagerank(
+                    spark.createDataFrame(edges, ["src", "dst"]),
+                    spark.createDataFrame([(v,) for v in seed_ids], ["id"]),
+                    max_iter=5,
+                ).collect()
+            }
+            ids = sorted(got)
+            idx = {v: i for i, v in enumerate(ids)}
+            out_deg = {}
+            for s, _ in edges:
+                out_deg[s] = out_deg.get(s, 0) + 1
+            tp = [1.0 / len(seed_ids) if v in seed_ids else 0.0 for v in ids]
+            rank = tp[:]
+            for _ in range(5):
+                contrib = [0.0] * len(ids)
+                for s, d in edges:
+                    contrib[idx[d]] += rank[idx[s]] / out_deg[s]
+                dangling = sum(rank[idx[v]] for v in ids if v not in out_deg)
+                rank = [
+                    0.15 * tp[i] + 0.85 * (contrib[i] + dangling * tp[i])
+                    for i in range(len(ids))
+                ]
+            assert set(got) == {v for e in edges for v in e}
+            for v in ids:
+                assert abs(got[v] - rank[idx[v]]) < 1e-9, (edges, v)
 
 
 class TestIVFPQ:

@@ -1,8 +1,10 @@
 """Generate OPERATORS.md — the one-page operator -> query index
 (r5 VERDICT item 8): every registry query, its implementing
-module:line, its oracle tier, and its one-line description, grouped by
-module. Deterministic output; tests/test_operator_index.py fails if
-the committed file drifts from the registry.
+module, its oracle tier, and its one-line description, grouped by
+module and sorted by query name. No line numbers: editing a plan
+module cannot make the index stale. Deterministic output;
+tests/test_operator_index.py fails if the committed file drifts from
+the registry.
 
     python tools/gen_operator_index.py          # rewrite OPERATORS.md
     python tools/gen_operator_index.py --check  # exit 1 if stale
@@ -23,20 +25,19 @@ OUT = os.path.join(REPO, "OPERATORS.md")
 def render() -> str:
     from erkg_tutorials_spark.plans.registry import ORACLES, QUERIES
 
-    by_module: dict[str, list[tuple[str, str, int, str, str]]] = {}
+    by_module: dict[str, list[tuple[str, str, str]]] = {}
     for name, fn in QUERIES.items():
         f = inspect.unwrap(fn)
         path = os.path.relpath(inspect.getsourcefile(f), REPO)
-        line = inspect.getsourcelines(f)[1]
         tier = "oracle" if name in ORACLES else "rows-only"
         doc = (inspect.getdoc(f) or "").split("\n", 1)[0].rstrip()
-        by_module.setdefault(path, []).append((name, path, line, tier, doc))
+        by_module.setdefault(path, []).append((name, tier, doc))
 
     n_oracle = sum(1 for n in QUERIES if n in ORACLES)
     lines = [
         "# OPERATORS — generated query index",
         "",
-        "One row per registry query: name, implementation site, oracle",
+        "One row per registry query, under its implementing module: name, oracle",
         "tier (`oracle` = exact-value DuckDB twin compared by the driver",
         "and the sf0.1 sweep; `rows-only` = weaker driver check), and the",
         "query's one-line description. GENERATED by",
@@ -51,14 +52,14 @@ def render() -> str:
         "",
     ]
     for path in sorted(by_module):
-        entries = sorted(by_module[path], key=lambda e: e[2])
+        entries = sorted(by_module[path])
         lines.append(f"## `{path}` ({len(entries)})")
         lines.append("")
-        lines.append("| query | line | tier | description |")
-        lines.append("|-------|------|------|-------------|")
-        for name, _, line, tier, doc in entries:
+        lines.append("| query | tier | description |")
+        lines.append("|-------|------|-------------|")
+        for name, tier, doc in entries:
             desc = doc.replace("|", "\\|")
-            lines.append(f"| `{name}` | {line} | {tier} | {desc} |")
+            lines.append(f"| `{name}` | {tier} | {desc} |")
         lines.append("")
     return "\n".join(lines)
 

@@ -70,6 +70,7 @@ def main() -> None:
             bpre.e_deg.select("src", "dst"),
             max_iter=PR_BASE_ITERS,
             pre=bpre.pre(),
+            symmetric=True,
         )
         r_base.write.format("noop").mode("overwrite").save()
         rec["base_sec"] = round(time.time() - t1, 3)
@@ -82,6 +83,7 @@ def main() -> None:
             max_iter=PR_DELTA_ITERS,
             pre=trade_graph_invariants(spark, sf_dir),
             init_ranks=r_base,
+            symmetric=True,
         )
         out = (
             ranks.select("id", F.round("rank", 6).alias("rank"))
