@@ -48,8 +48,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from erkg_tutorials_spark.graph.ckpt import checkpoint
 from erkg_tutorials_spark.graph.hints import vhint
-from erkg_tutorials_spark.graph.ckpt import CheckpointChain
 
 
 def bfs_round(f: DataFrame, vis: DataFrame, edges: DataFrame) -> DataFrame:
@@ -81,49 +81,39 @@ def betweenness_sampled(
     vertices with zero accumulated dependency and the unreached are
     absent (they cannot be in any top-k).
     """
+    from erkg_tutorials_spark.graph.loop_confs import iterate
+
     frontier = sources.select(
         F.col("lm"),
         F.col("lm").alias("id"),
         F.lit(1).cast("long").alias("sigma"),
     ).localCheckpoint(eager=True)
-    # r12: both sweeps run under the tuned loop session
-    # (graph/loop_confs.py) — the PageRank family's measured trade
-    # (per-level AQE re-planning of fixed shapes is driver overhead)
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
-
-    n_edges = edges.count()  # memoized edge table; sizing count
-    with tuned_loop_session(edges.sparkSession, n_edges) as (_loop, rebind):
-        out = _brandes_sweeps(
-            rebind(edges), rebind(frontier), sources, max_rounds
-        )
-    return out
-
-
-def _brandes_sweeps(edges, frontier, sources, max_rounds):
-    levels = [frontier]
-    chain_vis = CheckpointChain()
-    vis = chain_vis(frontier.select("lm", "id"))
+    vis0 = checkpoint(frontier.select("lm", "id"))
+    levels: list[DataFrame] = []
 
     # forward: keyed multi-source BFS carrying exact path counts
-    for _ in range(max_rounds):
-        nxt = bfs_round(levels[-1], vis, edges).localCheckpoint(eager=True)
+    def step(_i, vis, edges, frontier):
+        nxt = bfs_round(
+            levels[-1] if levels else frontier, vis, edges
+        ).localCheckpoint(eager=True)
         if nxt.isEmpty():
-            break
+            return
         levels.append(nxt)
-        vis = chain_vis(vis.unionByName(nxt.select("lm", "id")))
+        yield vis.unionByName(nxt.select("lm", "id"))
 
-    if len(levels) == 1:  # no source reaches anything
-        return (
-            sources.sparkSession.createDataFrame(
-                [], "id string, betweenness double"
-            )
+    iterate(
+        step, (vis0,), (edges, frontier), rounds=max_rounds,
+        size=edges.count(), owned=(frontier, vis0),
+    )
+    if not levels:  # no source reaches anything
+        return sources.sparkSession.createDataFrame(
+            [], "id string, betweenness double"
         )
-
-    # backward: dependency accumulation, deepest level first
+    # backward: dependency accumulation, deepest level first. The levels
+    # are loop-session frames, so these plans keep the loop confs too
     deltas: list[DataFrame] = []
     deeper: DataFrame | None = None
-    for lvl in range(len(levels) - 1, 0, -1):
-        v = levels[lvl]
+    for v in reversed(levels):
         if deeper is None:
             cur = v.withColumn("delta", F.lit(0.0))
         else:

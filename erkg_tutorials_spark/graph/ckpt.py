@@ -132,32 +132,52 @@ def _sever_origin(df: DataFrame) -> DataFrame:
         return df
 
 
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint with the origin payload severed — one
+    :class:`CheckpointChain` round without the release."""
+    return _sever_origin(df.localCheckpoint(eager=True))
+
+
+def _unpersist(df: DataFrame, rid: int | None) -> None:
+    if rid is not None:
+        rdd = df.sparkSession.sparkContext._jsc.getPersistentRDDs().get(rid)
+        if rdd is not None:
+            rdd.unpersist(False)
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks backing ``df``: its cache, or the localCheckpoint
+    RDD its plan wraps. Only for tables nothing live still reads."""
+    if df.is_cached:
+        df.unpersist()
+    else:
+        _unpersist(df, _checkpointed_rdd_id(df))
+
+
 class CheckpointChain:
     """Eager localCheckpoint that frees the previous round's blocks.
+
+    ``seed``: a :func:`checkpoint` of the loop's initial state that the
+    chain takes over — freed when the first round lands, kept if none
+    does (it is then the final state).
 
     Threading contract: a chain tracks ONE evolving loop variable and
     is single-threaded-per-chain by design — every caller here drives
     one chain from one loop thread. The internal lock only keeps the
-    release list consistent if a chain is ever shared; it does NOT make
+    release bookkeeping consistent if a chain is ever shared; it does NOT make
     sharing safe: checkpoint + id extraction run outside it, so two
     threads interleaving on one chain could release a checkpoint the
     other thread just received (unrecoverable — truncated lineage).
     Use one chain per concurrent loop instead."""
 
-    def __init__(self) -> None:
-        self._prev: list[int] = []
+    def __init__(self, seed: DataFrame | None = None) -> None:
+        self._prev = None if seed is None else _checkpointed_rdd_id(seed)
         self._lock = threading.Lock()  # consistency only; see class docstring
 
     def __call__(self, df: DataFrame) -> DataFrame:
-        ck = df.localCheckpoint(eager=True)
-        rid = _checkpointed_rdd_id(ck)
-        out = _sever_origin(ck)
-        jsc = out.sparkSession.sparkContext._jsc
+        out = checkpoint(df)
+        rid = _checkpointed_rdd_id(out)  # severed: wraps the same RDD
         with self._lock:
-            jmap = jsc.getPersistentRDDs()
-            for old in self._prev:
-                rdd = jmap.get(old)
-                if rdd is not None:
-                    rdd.unpersist(False)
-            self._prev = [rid] if rid is not None else []
+            _unpersist(out, self._prev)
+            self._prev = rid
         return out

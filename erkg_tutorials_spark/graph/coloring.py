@@ -45,8 +45,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from erkg_tutorials_spark.graph.ckpt import checkpoint
 from erkg_tutorials_spark.graph.hints import vhint
-from erkg_tutorials_spark.graph.ckpt import CheckpointChain
+from erkg_tutorials_spark.graph.loop_confs import iterate
 
 # colors the bit-mask color chooser can express; the trade graph uses
 # 3-4 — a budget overrun would surface as NULL colors in the totality
@@ -76,19 +77,15 @@ def _lowest_free_bit_sql(mask: str) -> str:
 def greedy_coloring(edges_sym: DataFrame, rounds: int = 10) -> DataFrame:
     """Jones-Plassmann coloring of a symmetric unweighted edge table;
     returns (id, color)."""
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
-
     n_edges = edges_sym.count()  # loop sizing (callers pass memoized tables)
     deg = edges_sym.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("deg")
     )
     # sortable largest-degree-first key: zero-padded (10^10 - deg),
     # then the hash tiebreak — lexicographic MIN = highest degree.
-    # r12: checkpointed once — pri is referenced two-to-three times
-    # per round (neighbor-min build + winner join), and as a lazy plan
-    # every reference re-ran the degree aggregation over the edge
-    # table (each broadcast build paid an |E| groupBy; now each pays
-    # an |V|-row RDD scan).
+    # Checkpointed once: pri is referenced two-to-three times per round
+    # (neighbor-min build + winner join), and as a lazy plan every
+    # reference re-ran the degree aggregation over the edge table.
     pri = deg.select(
         "id",
         F.concat(
@@ -100,36 +97,16 @@ def greedy_coloring(edges_sym: DataFrame, rounds: int = 10) -> DataFrame:
             F.md5(F.concat(F.lit("jp:"), F.col("id"))),
         ).alias("p"),
     ).localCheckpoint(eager=True)
-    verts = pri.select("id")
-    uchain = CheckpointChain()
-    unc = uchain(verts)
+    unc0 = checkpoint(pri.select("id"))
     # one count over the (checkpointed) vertex set feeds every hint
     # decision below: all broadcast state here (unc, pri, win, out) is
     # bounded by |V|, so a single estimate covers the whole loop —
     # above the hints.py threshold every join co-shuffles instead
-    n_verts = unc.count()
-    # r12: the shrinking rounds run under the tuned loop session
-    # (graph/loop_confs.py — AQE off, size-derived partitions), the
-    # same measured trade as the PageRank family: fixed known shapes
-    # per round make AQE re-planning pure driver overhead.
-    with tuned_loop_session(edges_sym.sparkSession, n_edges) as (
-        _loop,
-        rebind,
-    ):
-        out = _coloring_rounds(
-            rebind(edges_sym), rebind(pri), rebind(unc),
-            n_verts, rounds, uchain,
-        )
-    if out is None:  # vertexless input: empty result, same schema
-        out = verts.limit(0).withColumn("color", F.lit(0))
-    return out
-
-
-def _coloring_rounds(edges_sym, pri, unc, n_verts, rounds, uchain):
+    n_verts = unc0.count()
     out: DataFrame | None = None
-    for _r in range(rounds):
-        if unc.isEmpty():
-            break
+
+    def step(_r, unc, edges_sym, pri):
+        nonlocal out
         u_src = vhint(unc.select(F.col("id").alias("src")), n_verts)
         u_dst = vhint(unc.select(F.col("id").alias("dst")), n_verts)
         p_dst = vhint(
@@ -177,7 +154,14 @@ def _coloring_rounds(edges_sym, pri, unc, n_verts, rounds, uchain):
             )
         sel = sel.localCheckpoint(eager=True)
         out = sel if out is None else out.unionByName(sel)
-        unc = uchain(unc.join(sel.select("id"), "id", "left_anti"))
+        yield unc.join(sel.select("id"), "id", "left_anti")
+
+    (unc,), _ = iterate(
+        step, (unc0,), (edges_sym, pri), rounds=rounds, size=n_edges,
+        until=lambda _r, unc: unc.isEmpty(), owned=(pri, unc0),
+    )
+    if out is None:  # vertexless input: empty result, same schema
+        return unc.limit(0).withColumn("color", F.lit(0))
     return out
 
 

@@ -30,7 +30,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
+from erkg_tutorials_spark.graph.ckpt import checkpoint
+from erkg_tutorials_spark.graph.loop_confs import iterate
 
 # r12 (r11 VERDICT item 3): measured GraphX crossover for CC, same
 # in-JVM handoff the PageRank route uses (tools/graphx_cc_ab.py on
@@ -180,15 +181,10 @@ def connected_components(
     Iterates large-star/small-star until the edge set is a forest of
     stars (fixpoint), then reads components off the star edges.
 
-    The rounds run in the tuned loop window (graph/loop_confs.py), for
-    the same reason as in graph/pagerank.py — every round re-shuffles an
-    edge set of known, shrinking size, so AQE's per-round re-planning is
-    pure driver overhead and the partition count is derived once from
-    the materialized canonical edge count. The stars' window minimums
+    The rounds run under ``loop_confs.iterate``, sized by the
+    materialized canonical edge count. The stars' window minimums
     aggregate within one exchange, so hub-vertex skew costs a local
-    sort, not a blown partition. The tuned confs live on a cloned
-    session (graph/loop_confs.py), so concurrent queries on the
-    caller's session are unaffected.
+    sort, not a blown partition.
 
     ``input_canonical``: callers whose edge table is already distinct
     ordered pairs with src < dst and no self-loops (e.g. the bipartite
@@ -205,14 +201,11 @@ def connected_components(
         .distinct()
     )
     raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-
-    chain = CheckpointChain()
     if input_canonical:
         e = raw.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     else:
         e = _canonical(raw)
-    e = chain(e)
+    e = checkpoint(e)
 
     def is_star_forest(df: DataFrame) -> bool:
         # Direct fixpoint test, one job: the edge set is stable under
@@ -234,7 +227,6 @@ def connected_components(
         )
         return bad.isEmpty()
 
-    spark = edges.sparkSession
     # the route guard and the loop sizing share this count — e is
     # checkpoint-backed, so it materializes nothing new
     n_edges = e.count()
@@ -245,21 +237,19 @@ def connected_components(
     # the GraphX grouping)
     if n_edges >= _cc_graphx_min_edges():
         return _cc_graphx(e, vertices)
-    converged = False
-    with tuned_loop_session(spark, n_edges) as (_loop, rebind):
-        e = rebind(e)
-        for i in range(max_rounds):
-            e = chain(_small_star(_large_star(e)))
-            # a non-trivial graph never converges on round 0 (the check
-            # is a full pass over the round-0 edge set — the largest of
-            # the loop); if it somehow was a forest already, round 1
-            # runs once over the tiny converged set and the check fires
-            # then. Guarded so max_rounds=1 still checks.
-            if i == 0 and max_rounds > 1:
-                continue
-            if is_star_forest(e):
-                converged = True
-                break
+
+    def step(_i, e):
+        yield _small_star(_large_star(e))
+
+    # a non-trivial graph never converges on round 0 (the check is a
+    # full pass over the round-0 edge set — the largest of the loop); if
+    # it somehow was a forest already, round 1 runs once over the tiny
+    # converged set and the check fires then. max_rounds=1 still checks.
+    (e,), converged = iterate(
+        step, (e,), rounds=max_rounds, size=n_edges,
+        until=lambda i, e: i >= min(2, max_rounds) and is_star_forest(e),
+        owned=(e,),
+    )
     if not converged:
         raise RuntimeError(
             f"connected_components: edge set is not a star forest after "

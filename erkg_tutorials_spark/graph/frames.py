@@ -36,9 +36,21 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from erkg_tutorials_spark.graph.ckpt import checkpoint
 from erkg_tutorials_spark.graph.connected_components import connected_components
+from erkg_tutorials_spark.graph.hints import hints_enabled
 from erkg_tutorials_spark.graph.khop import k_hop, k_hop_labeled
+from erkg_tutorials_spark.graph.loop_confs import iterate
 from erkg_tutorials_spark.graph.pagerank import pagerank
+
+# shortestPaths / labelPropagation broadcast their O(|V|)-row state
+# (frontier, settled set, labels) into the edge join up to this many
+# rows; above it — or with hints off (graph/hints.py) — they shuffle
+BROADCAST_THRESHOLD_ROWS = 500_000
+
+
+def _broadcastable(rows: int) -> bool:
+    return hints_enabled() and rows <= BROADCAST_THRESHOLD_ROWS
 
 
 @dataclass(frozen=True)
@@ -151,12 +163,7 @@ class PropertyGraph:
             .withColumn("count", F.coalesce("count", F.lit(0)).cast("long"))
         )
 
-    def shortestPaths(
-        self,
-        landmarks: list,
-        max_rounds: int = 20,
-        broadcast_threshold_rows: int = 500_000,
-    ) -> DataFrame:
+    def shortestPaths(self, landmarks: list, max_rounds: int = 20) -> DataFrame:
         """(id, landmark, dist) — directed shortest-path distances from
         every vertex TO each landmark (GraphFrames semantics, result
         flattened to rows instead of a map column so it joins/oracles
@@ -173,11 +180,10 @@ class PropertyGraph:
         even on the small trade graph; at scale the frontier's
         monotone shrink after the expansion peak is the difference
         between BFS and repeated full passes. Same loop discipline as
-        connected_components: per-round localCheckpoint inside the
-        tuned-conf window (graph/loop_confs.py).
+        connected_components: the rounds run under loop_confs.iterate.
 
         Frontier/state broadcasting (r3): while the frontier (and the
-        settled (id, lm) set) stay under ``broadcast_threshold_rows``
+        settled (id, lm) set) stay under ``BROADCAST_THRESHOLD_ROWS``
         — tracked EXACTLY, each round's frontier count is the loop's
         own termination signal — the expansion join and the anti-join
         run map-side over the edge table: the O(|E|) side is never
@@ -188,51 +194,43 @@ class PropertyGraph:
         dedup keys on (id, lm) only — its exchange is exactly the
         anti-join's required clustering when the state side does
         shuffle."""
-        from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
-
-        from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-
         spark = self.edges.sparkSession
-        # e is loop-invariant (read every round): checkpointed directly,
-        # NOT chained. The two evolving states get a chain each.
-        chain_front, chain_state = CheckpointChain(), CheckpointChain()
         e = self.edges.select("src", "dst").localCheckpoint(eager=True)
-        state = chain_state(
+        state0 = checkpoint(
             spark.createDataFrame(
                 [(lm, lm, 0) for lm in landmarks], ["id", "lm", "dist"]
             )
         )
-        with tuned_loop_session(spark, e.count()) as (_loop, rebind):
-            e, state = rebind(e), rebind(state)
-            frontier = state
-            n_front = n_state = len(landmarks)
-            dist = 0
-            for _ in range(max_rounds):
-                dist += 1
-                f = frontier.select(F.col("id").alias("dst"), "lm")
-                if n_front <= broadcast_threshold_rows:
-                    f = F.broadcast(f)
-                st = state.select("id", "lm")
-                if n_state <= broadcast_threshold_rows:
-                    st = F.broadcast(st)
-                new = chain_front(
-                    e.join(f, "dst")
-                    .select(F.col("src").alias("id"), "lm")
-                    .dropDuplicates(["id", "lm"])
-                    .join(st, ["id", "lm"], "left_anti")
-                    .withColumn("dist", F.lit(dist))
-                )
-                n_front = new.count()
-                if n_front == 0:
-                    break
-                n_state += n_front
-                state = chain_state(state.unionByName(new))
-                frontier = new
+        n_front = n_state = len(landmarks)
+
+        def step(i, frontier, state, e):
+            nonlocal n_front, n_state
+            f = frontier.select(F.col("id").alias("dst"), "lm")
+            if _broadcastable(n_front):
+                f = F.broadcast(f)
+            st = state.select("id", "lm")
+            if _broadcastable(n_state):
+                st = F.broadcast(st)
+            new = yield (
+                e.join(f, "dst")
+                .select(F.col("src").alias("id"), "lm")
+                .dropDuplicates(["id", "lm"])
+                .join(st, ["id", "lm"], "left_anti")
+                .withColumn("dist", F.lit(i + 1))
+            )
+            n_front = new.count()
+            if n_front == 0:
+                return
+            n_state += n_front
+            yield state.unionByName(new)
+
+        (_, state), _ = iterate(
+            step, (state0, state0), (e,), rounds=max_rounds, size=e.count(),
+            owned=(e, state0),
+        )
         return state.select("id", F.col("lm").alias("landmark"), "dist")
 
-    def labelPropagation(
-        self, maxIter: int = 5, broadcast_threshold_rows: int = 500_000
-    ) -> DataFrame:
+    def labelPropagation(self, maxIter: int = 5) -> DataFrame:
         """(id, label) — synchronous label propagation run for exactly
         ``maxIter`` rounds (GraphFrames labelPropagation, made
         deterministic: most-frequent in-neighbor label, ties to the
@@ -244,42 +242,44 @@ class PropertyGraph:
         one hash aggregation with map-side partials — instead of a
         row_number window, whose per-vertex sort buys nothing over the
         associative min; and while the O(|V|) label table stays under
-        ``broadcast_threshold_rows`` both the edge join and the update
+        ``BROADCAST_THRESHOLD_ROWS`` both the edge join and the update
         join run map-side, so the O(|E|) side is never shuffled
         (measured 5.4s → 3.6s at sf0.1, identical labels; large
         graphs fall back to the shuffle join automatically)."""
-        from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
-
-        from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-
-        chain = CheckpointChain()
-        verts = self.vertices.select("id")
-        labels = chain(verts.select("id", F.col("id").alias("lbl")))
+        labels0 = checkpoint(
+            self.vertices.select("id", F.col("id").alias("lbl"))
+        )
         e = self.edges.select("src", "dst").localCheckpoint(eager=True)
-        with tuned_loop_session(e.sparkSession, e.count()) as (_loop, rebind):
-            e, labels = rebind(e), rebind(labels)
-            small = labels.count() <= broadcast_threshold_rows
-            bcast = (lambda df: F.broadcast(df)) if small else (lambda df: df)
-            for _ in range(maxIter):
-                winner = (
-                    e.join(bcast(labels.withColumnRenamed("id", "src")), "src")
-                    .select(F.col("dst").alias("id"), "lbl")
-                    .groupBy("id", "lbl")
-                    .agg(F.count("*").alias("c"))
-                    .select(
-                        "id",
-                        F.struct(
-                            (-F.col("c")).alias("nc"), F.col("lbl").alias("lbl")
-                        ).alias("s"),
-                    )
-                    .groupBy("id")
-                    .agg(F.min("s").alias("s"))
-                    .select("id", F.col("s.lbl").alias("new_lbl"))
+        bcast = None
+
+        def step(i, labels, e):
+            nonlocal bcast
+            if i == 0:  # sized once, inside the loop session
+                small = _broadcastable(labels.count())
+                bcast = F.broadcast if small else (lambda df: df)
+            winner = (
+                e.join(bcast(labels.withColumnRenamed("id", "src")), "src")
+                .select(F.col("dst").alias("id"), "lbl")
+                .groupBy("id", "lbl")
+                .agg(F.count("*").alias("c"))
+                .select(
+                    "id",
+                    F.struct(
+                        (-F.col("c")).alias("nc"), F.col("lbl").alias("lbl")
+                    ).alias("s"),
                 )
-                labels = chain(
-                    labels.join(bcast(winner), "id", "left")
-                    .select("id", F.coalesce("new_lbl", "lbl").alias("lbl"))
-                )
+                .groupBy("id")
+                .agg(F.min("s").alias("s"))
+                .select("id", F.col("s.lbl").alias("new_lbl"))
+            )
+            yield labels.join(bcast(winner), "id", "left").select(
+                "id", F.coalesce("new_lbl", "lbl").alias("lbl")
+            )
+
+        (labels,), _ = iterate(
+            step, (labels0,), (e,), rounds=maxIter, size=e.count(),
+            owned=(e, labels0),
+        )
         return labels.select("id", F.col("lbl").alias("label"))
 
     def triplets(self) -> DataFrame:

@@ -10,13 +10,11 @@ only authority mass — which makes the un-normalized iteration EXACT:
 * both engines therefore compute identical BIGINTs — no float
   summation-order ulp risk anywhere in the loop (stronger than the
   PageRank oracle's round-absorbs-ulp argument);
-* magnitudes grow by ≤ (max_hub_deg · max_auth_deg) per double-round.
-  With the default 3 double-rounds that bound stays far inside int64
-  for any realistic degree profile (e.g. 10⁴·10⁴ per round → 10²⁴
-  would overflow, but degree products that large mean a near-complete
-  bipartite graph; the sf1 trade graph is ~10⁵·10³ per round → 10²⁴?
-  no: (30·8000)³ ≈ 1.4e16 ≪ 9.2e18). The registered oracle
-  hash-gates the no-overflow assumption at every tested SF.
+* magnitudes grow by ≤ (max_hub_deg · max_auth_deg) per double-round,
+  so the default 3 double-rounds stay far inside int64 for any
+  realistic degree profile: e.g. (30·8000)³ ≈ 1.4e16 ≪ 9.2e18. The
+  registered oracle hash-gates the no-overflow assumption at every
+  tested SF.
 
 Normalization happens ONCE at the end (divide by the side's max,
 round 6) — a deterministic scalar division that both engines replay.
@@ -39,47 +37,43 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
     ``(side, id, score)`` where side ∈ {'hub', 'authority'}, score is
     the raw integer mass (callers normalize/round for display).
 
-    The loop runs inside the tuned cloned-session window
-    (graph/loop_confs.py, same rationale + concurrency-safety as
-    pagerank): AQE re-planning per half-round is pure overhead on
-    known shrinking shapes. Only the full-round hub table is
-    checkpointed — the authority table of the FINAL round is
-    checkpointed too since it feeds the result; intermediate authority
-    tables stay lazy inside their round's plan (halves the per-round
-    job count vs checkpointing both)."""
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
+    The rounds run under ``loop_confs.iterate``. Only the full-round
+    hub table is state; the authority table of the FINAL round is
+    checkpointed too since it feeds the result, while intermediate
+    authority tables stay lazy inside their round's plan (halves the
+    per-round job count vs checkpointing both)."""
+    from erkg_tutorials_spark.graph.loop_confs import iterate
 
-    spark = edges.sparkSession
     e0 = edges.select("src", "dst").localCheckpoint(eager=True)
-    with tuned_loop_session(spark, e0.count()) as (_loop, rebind):
-        from erkg_tutorials_spark.graph.ckpt import CheckpointChain
+    h0 = (
+        e0.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("h", F.lit(1).cast("long"))
+    )
+    a = None
 
-        chain = CheckpointChain()
-        e = rebind(e0)
-        h = (
-            e.select(F.col("src").alias("id"))
-            .distinct()
-            .withColumn("h", F.lit(1).cast("long"))
+    def step(i, h, e):
+        nonlocal a
+        a = (
+            e.join(h, e.src == h.id)
+            .groupBy(e.dst.alias("aid"))
+            .agg(F.sum("h").alias("a"))
+            .select(F.col("aid").alias("id"), "a")
         )
-        a = None
-        for i in range(iters):
-            a = (
-                e.join(h, e.src == h.id)
-                .groupBy(e.dst.alias("aid"))
-                .agg(F.sum("h").alias("a"))
-                .select(F.col("aid").alias("id"), "a")
-            )
-            if i == iters - 1:
-                # final authority table: checkpointed OUTSIDE the hub
-                # chain (it backs the result; the chain must never
-                # free it when the final h lands)
-                a = a.localCheckpoint(eager=True)
-            h = chain(
-                e.join(a, e.dst == a.id)
-                .groupBy(e.src.alias("hid"))
-                .agg(F.sum("a").alias("h"))
-                .select(F.col("hid").alias("id"), "h")
-            )
+        if i == iters - 1:
+            # final authority table: checkpointed outside the hub
+            # state (it backs the result)
+            a = a.localCheckpoint(eager=True)
+        yield (
+            e.join(a, e.dst == a.id)
+            .groupBy(e.src.alias("hid"))
+            .agg(F.sum("a").alias("h"))
+            .select(F.col("hid").alias("id"), "h")
+        )
+
+    (h,), _ = iterate(
+        step, (h0,), (e0,), rounds=iters, size=e0.count(), owned=(e0,)
+    )
     hubs = h.select(F.lit("hub").alias("side"), "id", F.col("h").alias("score"))
     auths = a.select(
         F.lit("authority").alias("side"), "id", F.col("a").alias("score")

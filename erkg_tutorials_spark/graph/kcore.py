@@ -43,49 +43,46 @@ def k_core(edges_sym: DataFrame, k: int, max_rounds: int = 6) -> DataFrame:
     ``max_rounds`` — a silent non-converged answer would be wrong, not
     approximate (vertices kept that a further round would drop).
     """
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
+    from erkg_tutorials_spark.graph.ckpt import checkpoint
+    from erkg_tutorials_spark.graph.loop_confs import iterate
 
-    chain = CheckpointChain()
-    e = chain(edges_sym)
-    n_edges = e.count()
-    # r12: peel rounds under the tuned loop session
-    # (graph/loop_confs.py) — the PageRank family's measured trade
-    with tuned_loop_session(edges_sym.sparkSession, n_edges) as (
-        _loop,
-        rebind,
-    ):
-        return _kcore_peel(rebind(e), n_edges, k, max_rounds, chain)
+    e0 = checkpoint(edges_sym)
+    counts = [e0.count()]
 
-
-def _kcore_peel(e, n_edges, k, max_rounds, chain):
-    for _ in range(max_rounds):
+    def step(_i, e):
         keep = (
             e.groupBy(F.col("src").alias("id"))
             .agg(F.count("*").alias("deg"))
             .where(F.col("deg") >= k)
             .select("id")
         )
-        e2 = chain(
+        yield (
             e.join(keep, e["src"] == keep["id"], "left_semi")
             .join(keep, e["dst"] == keep["id"], "left_semi")
         )
-        n2 = e2.count()
-        if n2 == n_edges:
-            # read the degrees off e2, not e: the chain freed e's
-            # blocks when e2 materialized (equal count ⇒ same set)
-            return (
-                e2.groupBy(F.col("src").alias("id"))
-                .agg(F.count("*").alias("deg"))
-                .where(F.col("deg") >= k)
-            )
-        e, n_edges = e2, n2
-        if n_edges == 0:
-            return e.select(
-                F.col("src").alias("id"), F.lit(0).cast("long").alias("deg")
-            ).limit(0)
-    raise RuntimeError(
-        f"k_core(k={k}) did not converge within {max_rounds} peel rounds"
+
+    def fixpoint(i, e):
+        if i:
+            counts.append(e.count())
+        return counts[-1] == 0 or (i > 0 and counts[-1] == counts[-2])
+
+    (e,), converged = iterate(
+        step, (e0,), rounds=max_rounds, size=counts[0], until=fixpoint,
+        owned=(e0,),
+    )
+    if not converged:
+        raise RuntimeError(
+            f"k_core(k={k}) did not converge within {max_rounds} peel rounds"
+        )
+    if counts[-1] == 0:
+        return e.select(
+            F.col("src").alias("id"), F.lit(0).cast("long").alias("deg")
+        ).limit(0)
+    # equal count ⇒ the last round dropped nothing: e is the k-core
+    return (
+        e.groupBy(F.col("src").alias("id"))
+        .agg(F.count("*").alias("deg"))
+        .where(F.col("deg") >= k)
     )
 
 

@@ -32,8 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from erkg_tutorials_spark.graph.ckpt import checkpoint
 from erkg_tutorials_spark.graph.hints import vhint
-from erkg_tutorials_spark.graph.ckpt import CheckpointChain
+from erkg_tutorials_spark.graph.loop_confs import iterate
 
 
 def luby_mis(edges_sym: DataFrame, rounds: int = 6) -> DataFrame:
@@ -42,43 +43,20 @@ def luby_mis(edges_sym: DataFrame, rounds: int = 6) -> DataFrame:
     Returns (id, round) — the round in which each vertex entered the
     independent set.
     """
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
-
     n_edges = edges_sym.count()  # loop sizing (callers pass memoized tables)
-    # r12: pri checkpointed once — as a lazy plan it re-ran the
-    # distinct over the edge table on every per-round reference (same
-    # fix/measurement protocol as graph/coloring.py)
+    # checkpointed once: as a lazy plan it re-ran the distinct over the
+    # edge table on every per-round reference
     pri = (
         edges_sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("p", F.md5(F.concat(F.lit("mis:"), F.col("id"))))
         .localCheckpoint(eager=True)
     )
-    chain = CheckpointChain()
-    act = chain(pri.select("id"))
-    # r12: shrinking Luby rounds under the tuned loop session
-    # (graph/loop_confs.py), the PageRank family's measured trade —
-    # AQE re-planning of per-round fixed shapes is driver overhead
-    with tuned_loop_session(edges_sym.sparkSession, n_edges) as (
-        _loop,
-        rebind,
-    ):
-        out = _luby_rounds(
-            rebind(edges_sym), rebind(pri), rebind(act), rounds, chain
-        )
-    if out is None:  # vertexless input: empty set, same schema
-        out = pri.select("id").limit(0).withColumn("round", F.lit(0))
-    return out
-
-
-def _luby_rounds(edges_sym, pri, act, rounds, chain):
+    act0 = checkpoint(pri.select("id"))
     out: DataFrame | None = None
-    for r in range(rounds):
-        # converged: nothing active means every later round selects
-        # nothing — identical output to the oracle's full unrolling
-        # (its remaining sel CTEs are empty), without the jobs
-        if act.isEmpty():
-            break
+
+    def step(r, act, edges_sym, pri):
+        nonlocal out
         a_src = vhint(act.select(F.col("id").alias("src")))
         a_dst = vhint(act.select(F.col("id").alias("dst")))
         p_dst = vhint(
@@ -107,9 +85,17 @@ def _luby_rounds(edges_sym, pri, act, rounds, chain):
             .select(F.col("dst").alias("id"))
             .distinct()
         )
-        act = chain(
-            act.join(sel, "id", "left_anti").join(rem, "id", "left_anti")
-        )
+        yield act.join(sel, "id", "left_anti").join(rem, "id", "left_anti")
+
+    # converged: nothing active means every later round selects nothing
+    # — identical output to the oracle's full unrolling (its remaining
+    # sel CTEs are empty), without the jobs
+    (act,), _ = iterate(
+        step, (act0,), (edges_sym, pri), rounds=rounds, size=n_edges,
+        until=lambda _i, act: act.isEmpty(), owned=(pri, act0),
+    )
+    if out is None:  # vertexless input: empty set, same schema
+        return act.limit(0).withColumn("round", F.lit(0))
     return out
 
 

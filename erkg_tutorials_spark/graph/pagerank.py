@@ -42,10 +42,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from erkg_tutorials_spark.graph.loop_confs import (
-    loop_partitions,
-    tuned_loop_session,
-)
+from erkg_tutorials_spark.graph.loop_confs import iterate, loop_partitions
 
 # r11: the A/B with the in-JVM handoff (tools/graphx_ab.py
 # run_graphx_mem — no file marshalling) found the crossover: the DF
@@ -313,19 +310,8 @@ def _iterate(
     turns a mass (the restart probability, a dangling sum) into this
     vertex's part of it. ``owned`` are the tables this call cached and
     frees on exit (caller-owned ``pre`` / ``tp`` tables are left alone).
-
-    Loop confs (measured 11.3s → 4.6s on the sf0.1 trade graph): inside
-    the loop, AQE is disabled and the shuffle partition count is derived
-    from the materialized edge count — every iteration has the SAME
-    known shapes, so AQE's per-iteration re-planning/compile is pure
-    driver overhead, and its coalescing fights the size-derived
-    partitioning. Skew stays handled: the only per-iteration shuffle is
-    the contrib sum, which partial-aggregates map-side before the
-    exchange (hub vertices arrive pre-combined). The tuned confs live on
-    a cloned session (graph/loop_confs.py) — concurrent queries on the
-    caller's session are unaffected.
+    The rounds run under :func:`~erkg_tutorials_spark.graph.loop_confs.iterate`.
     """
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
     from erkg_tutorials_spark.graph.hints import hints_enabled
 
     # materializing the cached e_deg (the biggest shuffle, run at
@@ -336,103 +322,103 @@ def _iterate(
     # dangler-free/unweighted/cold-start case runs on classpath GraphX
     if route is not None and n_edges >= _graphx_min_edges() and danglers.isEmpty():
         out = route()
-    else:
-        keys = ns + ["id"]
-        # global graphs: |ranks| = |V| ≪ |E| — broadcasting the rank
-        # vector makes each iteration's rank⋈edges a map-side join over
-        # the cached edge table; the only shuffle left per iteration is
-        # the contrib aggregation (PageRank's irreducible message
-        # traffic). Namespaced (per-doc) graphs shuffle-join: there the
-        # rank table is the full token×doc set, and on the bounded
-        # TextRank doc set a broadcast was measured slower (its
-        # per-iteration build jobs outweigh the tiny shuffle). The
-        # family-wide hint knob (graph/hints.py) force-disables it.
-        bcast = F.broadcast if not ns and hints_enabled() else (lambda df: df)
-        per_edge = (
-            (F.col("rank") * F.col("w")) / F.col("w_total")
-            if "w_total" in e_deg.columns
-            else F.col("rank") / F.col("out_deg")
-        )
-        with tuned_loop_session(e_deg.sparkSession, n_edges) as (_loop, rebind):
-            # loop-invariant caches keep their PARENT-session layout
-            # (scan/AQE-shaped — 64+ tiny partitions for a table the loop
-            # sizing puts at loop_partitions(n) ≈ 8 locally), and every
-            # iteration re-reads them: the per-iteration fixed cost was
-            # dominated by task count, not data (r13 timeline probe: ~280
-            # tasks/iteration at sf0.1, ≥90% of them sub-10 ms cache-scan
-            # tasks). coalesce() is a narrow merge-at-read — no shuffle,
-            # no extra materialization — that sizes every loop-side read
-            # to the loop's own partitioning, growing with the edge count.
-            p_loop = loop_partitions(n_edges)
-            ranks = rebind(ranks)
-            verts, e_deg, danglers = (
-                rebind(df).coalesce(p_loop) for df in (verts, e_deg, danglers)
-            )
-            # graphs without dangling vertices (every symmetric one) skip
-            # the per-iteration dangling agg + broadcast; one cheap probe
-            # inside the tuned window, whose shapes are the loop's shapes
+        for df in owned:
+            df.unpersist()
+        return out
+    keys = ns + ["id"]
+    # global graphs: |ranks| = |V| ≪ |E| — broadcasting the rank
+    # vector makes each iteration's rank⋈edges a map-side join over
+    # the cached edge table; the only shuffle left per iteration is
+    # the contrib aggregation (PageRank's irreducible message
+    # traffic). Namespaced (per-doc) graphs shuffle-join: there the
+    # rank table is the full token×doc set, and on the bounded
+    # TextRank doc set a broadcast was measured slower (its
+    # per-iteration build jobs outweigh the tiny shuffle). The
+    # family-wide hint knob (graph/hints.py) force-disables it.
+    bcast = F.broadcast if not ns and hints_enabled() else (lambda df: df)
+    per_edge = (
+        (F.col("rank") * F.col("w")) / F.col("w_total")
+        if "w_total" in e_deg.columns
+        else F.col("rank") / F.col("out_deg")
+    )
+    # loop-invariant caches keep their PARENT-session layout
+    # (scan/AQE-shaped — 64+ tiny partitions for a table the loop
+    # sizing puts at loop_partitions(n) ≈ 8 locally), and every
+    # iteration re-reads them: the per-iteration fixed cost was
+    # dominated by task count, not data (~280 tasks/iteration at sf0.1,
+    # ≥90% of them sub-10 ms cache-scan tasks). coalesce() is a narrow
+    # merge-at-read — no shuffle, no extra materialization — that sizes
+    # every loop-side read to the loop's own partitioning.
+    p_loop = loop_partitions(n_edges)
+    has_danglers = join_verts = False
+
+    def step(i, ranks, verts, e_deg, danglers):
+        nonlocal has_danglers, join_verts
+        if i == 0:
+            # once per call, inside the loop session, whose shapes are
+            # the loop's shapes. Graphs without dangling vertices (every
+            # symmetric one) skip the per-iteration dangling agg +
+            # broadcast. When each vertex has an in-edge the contrib
+            # aggregation's key set IS the vertex set, so the verts
+            # left-join is the identity and is skipped — unless the join
+            # carries a per-vertex column. Asserted by symmetric callers,
+            # else probed.
             has_danglers = not danglers.isEmpty()
-            # every-vertex-receives-mass: when each vertex has an in-edge
-            # the contrib aggregation's key set IS the vertex set, so the
-            # per-iteration verts left-join is the identity and is
-            # skipped — unless the join carries a per-vertex column.
-            # Asserted by symmetric callers, else probed once per call
             join_verts = bool(carry) or not (
                 symmetric
                 or verts.join(
                     e_deg.select(F.col("dst").alias("id")), ["id"], "left_anti"
                 ).isEmpty()
             )
-            chain = CheckpointChain()
-            for _ in range(max_iter):
-                contribs = (
-                    bcast(ranks.select(*ns, F.col("id").alias("src"), "rank"))
-                    .join(e_deg, ns + ["src"])
-                    .select(*ns, F.col("dst").alias("id"), per_edge.alias("c"))
-                    .groupBy(*keys)
-                    .agg(F.sum("c").alias("contrib"))
+        contribs = (
+            bcast(ranks.select(*ns, F.col("id").alias("src"), "rank"))
+            .join(e_deg, ns + ["src"])
+            .select(*ns, F.col("dst").alias("id"), per_edge.alias("c"))
+            .groupBy(*keys)
+            .agg(F.sum("c").alias("contrib"))
+        )
+        base = verts.join(contribs, keys, "left") if join_verts else contribs
+        dangling = F.lit(0.0)
+        if has_danglers:
+            mass = ranks.join(danglers, keys, "left_semi")
+            if ns:
+                base = base.join(
+                    mass.groupBy(*ns).agg(F.sum("rank").alias("dangling")),
+                    ns,
+                    "left",
                 )
-                base = verts.join(contribs, keys, "left") if join_verts else contribs
-                dangling = F.lit(0.0)
-                if has_danglers:
-                    mass = ranks.join(danglers, keys, "left_semi")
-                    if ns:
-                        base = base.join(
-                            mass.groupBy(*ns).agg(F.sum("rank").alias("dangling")),
-                            ns,
-                            "left",
+            else:
+                # agg on a (possibly empty) semi-join yields one row
+                base = base.crossJoin(
+                    F.broadcast(
+                        mass.agg(
+                            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
                         )
-                    else:
-                        # agg on a (possibly empty) semi-join yields one row
-                        base = base.crossJoin(
-                            F.broadcast(
-                                mass.agg(
-                                    F.coalesce(F.sum("rank"), F.lit(0.0))
-                                    .alias("dangling")
-                                )
-                            )
-                        )
-                    dangling = F.coalesce(F.col("dangling"), F.lit(0.0))
-                # eager per-iteration checkpoint: the rank state is O(|V|)
-                # rows, but the *plan* doubles every uncheckpointed round.
-                # The chain frees round i-1's blocks as round i lands.
-                ranks = chain(
-                    base.select(
-                        *keys,
-                        *carry,
-                        (
-                            share(F.lit(reset))
-                            + F.lit(1.0 - reset)
-                            * (F.coalesce(F.col("contrib"), F.lit(0.0)) + share(dangling))
-                        ).alias("rank"),
                     )
                 )
-        out = ranks.select(*keys, "rank")
-    # the returned frame is checkpoint-backed; the loop-invariant caches
-    # are no longer needed by its lineage
-    for df in owned:
-        df.unpersist()
-    return out
+            dangling = F.coalesce(F.col("dangling"), F.lit(0.0))
+        # the rank state is O(|V|) rows, but the *plan* doubles every
+        # uncheckpointed round — iterate checkpoints it every round
+        yield base.select(
+            *keys,
+            *carry,
+            (
+                share(F.lit(reset))
+                + F.lit(1.0 - reset)
+                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + share(dangling))
+            ).alias("rank"),
+        )
+
+    (ranks,), _ = iterate(
+        step,
+        (ranks,),
+        [df.coalesce(p_loop) for df in (verts, e_deg, danglers)],
+        rounds=max_iter,
+        size=n_edges,
+        owned=owned,
+    )
+    # checkpoint-backed: the owned caches are no longer in its lineage
+    return ranks.select(*keys, "rank")
 
 
 def _pagerank_graphx(e, verts, n_verts, reset: float, max_iter: int) -> DataFrame:

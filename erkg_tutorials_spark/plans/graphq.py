@@ -1893,38 +1893,31 @@ def _katz_oracle() -> str:
 @register("g_katz_top20", _katz_oracle())
 def g_katz_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Katz centrality: fixed-iteration attenuated path counting, top-20 by rounded score."""
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
+    from erkg_tutorials_spark.graph.ckpt import checkpoint
+    from erkg_tutorials_spark.graph.loop_confs import iterate
 
     edges = trade_edges_sym(spark, sf_dir)
     verts = edges.select(F.col("src").alias("id")).distinct().localCheckpoint(True)
-    x = verts.select("id", F.lit(1.0).alias("x"))
-    chain = CheckpointChain()
-    x = chain(x)
-    # r12: the fixed-round loop runs under the tuned loop session the
-    # PageRank family already uses (AQE off + size-derived partitions;
-    # graph/loop_confs.py) — every round re-shuffles the same known
-    # shapes, so AQE's per-round re-planning is pure driver overhead
-    # (measured on this query, best-of-4 at sf0.1: 7.35 s → 5.35 s).
-    n_edges = edges.count()  # memoized edge table — the count is cheap
-    with tuned_loop_session(spark, n_edges) as (_loop, rebind):
-        x, verts_l, edges_l = rebind(x), rebind(verts), rebind(edges)
-        for _ in range(KATZ_ITERS):
-            contrib = (
-                vhint(x.select(F.col("id").alias("src"), "x"))
-                .join(edges_l, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("x").alias("c"))
-            )
-            x = chain(
-                verts_l.join(contrib, "id", "left").select(
-                    "id",
-                    (
-                        F.lit(KATZ_ALPHA) * F.coalesce("c", F.lit(0.0))
-                        + F.lit(1.0)
-                    ).alias("x"),
-                )
-            )
+    x0 = checkpoint(verts.select("id", F.lit(1.0).alias("x")))
+
+    def step(_i, x, verts, edges):
+        contrib = (
+            vhint(x.select(F.col("id").alias("src"), "x"))
+            .join(edges, "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("x").alias("c"))
+        )
+        yield verts.join(contrib, "id", "left").select(
+            "id",
+            (
+                F.lit(KATZ_ALPHA) * F.coalesce("c", F.lit(0.0)) + F.lit(1.0)
+            ).alias("x"),
+        )
+
+    (x,), _ = iterate(
+        step, (x0,), (verts, edges), rounds=KATZ_ITERS,
+        size=edges.count(), owned=(verts, x0),
+    )
     return (
         x.select("id", F.round("x", 6).alias("katz"))
         .orderBy(F.desc("katz"), F.asc("id"))
@@ -1992,32 +1985,28 @@ def _eigenvector_oracle() -> str:
 def g_eigenvector_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 eigenvector centrality via exact-integer shifted power
     iteration (A+I), max-normalized once at the end."""
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
+    from erkg_tutorials_spark.graph.ckpt import checkpoint
+    from erkg_tutorials_spark.graph.loop_confs import iterate
 
     edges = trade_edges_sym(spark, sf_dir)
     verts, _, _ = trade_graph_invariants(spark, sf_dir)
-    x = verts.select("id", F.lit(1).cast("long").alias("x"))
-    chain = CheckpointChain()
-    x = chain(x)
-    # r12: tuned loop session, same rationale and measurement protocol
-    # as g_katz_top20 above (AQE re-planning is per-round driver
-    # overhead on a fixed-shape loop).
-    n_edges = edges.count()
-    with tuned_loop_session(spark, n_edges) as (_loop, rebind):
-        x, edges_l = rebind(x), rebind(edges)
-        for _ in range(EIGEN_ITERS):
-            contrib = (
-                vhint(x.select(F.col("id").alias("src"), "x"))
-                .join(edges_l, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("x").alias("c"))
-            )
-            x = chain(
-                x.join(contrib, "id", "left").select(
-                    "id", (F.col("x") + F.coalesce("c", F.lit(0))).alias("x")
-                )
-            )
+    x0 = checkpoint(verts.select("id", F.lit(1).cast("long").alias("x")))
+
+    def step(_i, x, edges):
+        contrib = (
+            vhint(x.select(F.col("id").alias("src"), "x"))
+            .join(edges, "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("x").alias("c"))
+        )
+        yield x.join(contrib, "id", "left").select(
+            "id", (F.col("x") + F.coalesce("c", F.lit(0))).alias("x")
+        )
+
+    (x,), _ = iterate(
+        step, (x0,), (edges,), rounds=EIGEN_ITERS, size=edges.count(),
+        owned=(x0,),
+    )
     mx = x.agg(F.max("x").alias("mxs"))
     # top-20 cut FIRST via orderBy+limit (TakeOrderedAndProject — no
     # global single-partition window over |V| rows); the rank window

@@ -439,28 +439,13 @@ def _bfs(edges: DataFrame, src_1row: DataFrame, rounds: int) -> DataFrame:
     the betweenness gate's documented |V|-row class."""
     from pyspark.sql import functions as F
 
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
+    from erkg_tutorials_spark.graph.ckpt import checkpoint
+    from erkg_tutorials_spark.graph.loop_confs import iterate
 
-    dchain = CheckpointChain()
-    fchain = CheckpointChain()
-    d = dchain(src_1row.select("id", F.lit(0).alias("d")))
-    frontier = fchain(src_1row.select("id"))
-    # r12: frontier rounds under the tuned loop session
-    # (graph/loop_confs.py) — the PageRank family's measured trade
-    n_edges = edges.count()  # memoized edge table; sizing count
-    with tuned_loop_session(edges.sparkSession, n_edges) as (_loop, rebind):
-        d, frontier, edges = rebind(d), rebind(frontier), rebind(edges)
-        d = _bfs_rounds(edges, d, frontier, rounds, dchain, fchain)
-    return d
+    d0 = checkpoint(src_1row.select("id", F.lit(0).alias("d")))
+    frontier0 = checkpoint(src_1row.select("id"))
 
-
-def _bfs_rounds(edges, d, frontier, rounds, dchain, fchain):
-    from pyspark.sql import functions as F
-
-    for i in range(1, rounds + 1):
-        if frontier.isEmpty():  # reach stopped growing: layers final
-            break
+    def step(i, frontier, d, edges):
         nxt = (
             edges.join(
                 vhint(frontier.select(F.col("id").alias("src"))),
@@ -469,12 +454,17 @@ def _bfs_rounds(edges, d, frontier, rounds, dchain, fchain):
             .select(F.col("dst").alias("id"))
             .distinct()
         )
-        frontier = fchain(nxt.join(d, "id", "left_anti"))
-        d = dchain(
-            d.unionByName(
-                frontier.select("id", F.lit(i).cast("int").alias("d"))
-            )
+        frontier = yield nxt.join(d, "id", "left_anti")
+        yield d.unionByName(
+            frontier.select("id", F.lit(i + 1).cast("int").alias("d"))
         )
+
+    # an empty frontier means reach stopped growing: the layers are final
+    (_, d), _ = iterate(
+        step, (frontier0, d0), (edges,), rounds=rounds, size=edges.count(),
+        until=lambda _i, frontier, _d: frontier.isEmpty(),
+        owned=(frontier0, d0),
+    )
     return d
 
 

@@ -888,11 +888,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Two-pass exact heavy hitters: Misra–Gries candidate generation in
 # bounded memory (one Arrow mapInPandas pass keeping at most K
-# counters per partition) followed by an EXACT count of the candidate
-# set only. The classic 100 TB pattern for "which tokens exceed a
-# frequency share" when token cardinality dwarfs executor memory:
-# MG(K) on a partition retains every item whose partition frequency
-# exceeds n_p/K, and any global heavy hitter (freq > n/K) must clear
+# counters per partition — analytics2.misra_gries_candidates) followed
+# by an EXACT count of the candidate set only. The classic 100 TB
+# pattern for "which tokens exceed a frequency share" when token
+# cardinality dwarfs executor memory: MG(K) on a partition retains
+# every item whose partition frequency exceeds n_p/(K+1), and any global heavy hitter (freq > n/K) must clear
 # that bar in at least one partition (averaging argument), so the
 # candidate union is a SUPERSET of the true hitters no matter how
 # rows are partitioned. The second pass semi-joins the candidate set
@@ -924,7 +924,7 @@ def _heavy_hitters_oracle() -> str:
 @register("heavy_hitters_tokens", _heavy_hitters_oracle())
 def heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact heavy-hitter tokens via bounded-memory Misra-Gries candidates plus an exact verification count of the candidate set."""
-    import pandas as pd
+    from erkg_tutorials_spark.plans.analytics2 import misra_gries_candidates
 
     docs = load_tables(spark, sf_dir)["documents"]
     toks = docs.select(
@@ -932,21 +932,7 @@ def heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("tok") != "")
 
     def mg_candidates(batches):
-        # one bounded dict per PARTITION (state survives across the
-        # partition's Arrow batches); standard Misra-Gries decrement
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            for tok in pdf["tok"]:
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < HH_K:
-                    counters[tok] = 1
-                else:
-                    for k in list(counters):
-                        counters[k] -= 1
-                        if counters[k] == 0:
-                            del counters[k]
-        yield pd.DataFrame({"tok": list(counters)})
+        yield from misra_gries_candidates(batches, "tok", HH_K)
 
     cand = toks.mapInPandas(mg_candidates, "tok string").distinct()
     total = toks.agg(F.count("*").alias("n"))

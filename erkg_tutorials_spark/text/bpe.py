@@ -36,6 +36,8 @@ relative to the corpus; the corpus is touched exactly once, in
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -68,34 +70,26 @@ def bpe_train(words: DataFrame, n_merges: int) -> tuple[DataFrame, DataFrame]:
     ``(step, left, right, pair_count)``; state is the final
     ``(word, freq, pos, sym)`` symbolization.
     """
-    from erkg_tutorials_spark.graph.ckpt import CheckpointChain
-    from erkg_tutorials_spark.graph.loop_confs import tuned_loop_session
+    from erkg_tutorials_spark.graph.ckpt import checkpoint
+    from erkg_tutorials_spark.graph.loop_confs import iterate
 
-    spark = words.sparkSession
-    # rolling chains: the per-round state and best-pair checkpoints
-    # are dead once the next round lands; merge_row checkpoints are
-    # NOT chained (all of them feed the final merges output)
-    chain_state = CheckpointChain()
-    state0 = chain_state(_init_state(words))
-    n_rows = state0.count()
+    state0 = checkpoint(_init_state(words))
     w_pos = Window.partitionBy("word").orderBy("pos")
     merge_rows: list[DataFrame] = []
 
-    with tuned_loop_session(spark, n_rows) as (_loop, rebind):
-        state = rebind(state0)
-        for step in range(1, n_merges + 1):
-            merge_rows.append(_bpe_round(state, w_pos, step, chain_state))
-            state = merge_rows[-1][1]
-        merge_rows = [m[0] for m in merge_rows]
+    def step(i, state):
+        merge_row, next_state = _bpe_round(state, w_pos, i + 1)
+        merge_rows.append(merge_row)
+        yield next_state
 
-    merges = merge_rows[0]
-    for m in merge_rows[1:]:
-        merges = merges.unionByName(m)
-    return merges, state
+    (state,), _ = iterate(
+        step, (state0,), rounds=n_merges, size=state0.count(), owned=(state0,)
+    )
+    return reduce(DataFrame.unionByName, merge_rows), state
 
 
 def _bpe_round(
-    state: DataFrame, w_pos: Window, step: int, chain_state
+    state: DataFrame, w_pos: Window, step: int
 ) -> tuple[DataFrame, DataFrame]:
     """One merge round: returns (merge_row, next_state)."""
     nxt = F.lead("sym").over(w_pos)
@@ -159,7 +153,6 @@ def _bpe_round(
         .withColumn("pos", F.row_number().over(w_pos).cast("long"))
         .select("word", "freq", "pos", "sym")
     )
-    next_state = chain_state(next_state)
     return merge_row, next_state
 
 

@@ -67,21 +67,27 @@ class TestGreedyColoring:
     ):
         """The 100x-scale path (graph/hints.py force-disabled: every
         |V|-row state join co-shuffles on the vertex key instead of
-        broadcasting) must produce the IDENTICAL coloring — the hint
-        is a physical-plan choice, never a semantic one. This is the
-        r9 VERDICT item-2 parity gate: the no-hint fallback used to be
-        a documented code edit whose result parity was untested."""
-        monkeypatch.setenv("SPARK_GRAFT_GRAPH_BCAST", "0")
+        broadcasting) must produce the IDENTICAL coloring — and the
+        identical label propagation, whose label broadcast obeys the
+        same knob — the hint is a physical-plan choice, never a
+        semantic one."""
         from erkg_tutorials_spark.graph.coloring import greedy_coloring
+        from erkg_tutorials_spark.graph.frames import from_edges
         from erkg_tutorials_spark.plans.graphq import trade_edges_sym
 
+        edges = trade_edges_sym(spark, SF_DIR)
+
+        def labels():
+            lp = from_edges(edges).labelPropagation(maxIter=3)
+            return sorted(map(tuple, lp.collect()))
+
+        hinted_labels = labels()
+        monkeypatch.setenv("SPARK_GRAFT_GRAPH_BCAST", "0")
         no_hint = {
-            r.id: r.color
-            for r in greedy_coloring(
-                trade_edges_sym(spark, SF_DIR)
-            ).collect()
+            r.id: r.color for r in greedy_coloring(edges).collect()
         }
         assert no_hint == coloring
+        assert labels() == hinted_labels
 
     def test_vhint_threshold_and_knob(self, monkeypatch):
         """vhint drops the hint above the row threshold and under the

@@ -1,12 +1,12 @@
-"""r12 optimization-round microbench: time individual registry queries
+"""Microbench: time individual registry queries
 under the bench.py steady-state conventions (shared views warmed,
 best-of-N, noop sink) and optionally dump their .explain("formatted")
-plans to plans/r12/.
+plans to plans/micro/.
 
-    python tools/r12_micro.py [--runs N] [--plans SUFFIX] [--no-warm] query ...
+    python tools/micro.py [--runs N] [--plans SUFFIX] [--no-warm] query ...
 
---plans before|after  writes plans/r12/<query>_<suffix>.txt for each
-                      query (the deliverable the judge diffs).
+--plans before|after  writes plans/micro/<query>_<suffix>.txt for each
+                      query, for before/after plan diffs.
 --no-warm             skip the shared-materialization warm-up (for
                       queries that must be timed cold).
 
@@ -97,7 +97,7 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
-        "erkg-r12-micro",
+        "erkg-micro",
         extra_conf={
             "spark.ui.enabled": "false",
             "spark.sql.ui.retainedExecutions": "10",
@@ -107,7 +107,7 @@ def main() -> None:
     if do_warm:
         warm(spark, sf_dir)
 
-    plans_dir = os.path.join(REPO, "plans", "r12")
+    plans_dir = os.path.join(REPO, "plans", "micro")
     if plans_suffix:
         os.makedirs(plans_dir, exist_ok=True)
 
@@ -117,7 +117,7 @@ def main() -> None:
         fn = QUERIES[name]
         rs = []
         for r in range(runs):
-            spark.sparkContext.setJobDescription(f"r12micro:{name}#{r}")
+            spark.sparkContext.setJobDescription(f"micro:{name}#{r}")
             t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()

@@ -33,7 +33,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from tools.r12_micro import warm
+    from tools.micro import warm
 
     warm(spark, sf_dir)
 

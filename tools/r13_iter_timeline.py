@@ -25,7 +25,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("erkg-r13-timeline", extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    from tools.r12_micro import warm
+    from tools.micro import warm
 
     warm(spark, sf_dir)
 
