@@ -21,18 +21,29 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from erkg_tutorials_spark.session import get_spark  # noqa: E402
 from erkg_tutorials_spark.plans.registry import QUERIES  # noqa: E402
 
+def _artifact_name(rnd: int, cores: int | None) -> str:
+    """Local artifact file for round ``rnd`` at ``cores`` cores. Runs at
+    different core counts are not comparable, so the core count is part
+    of the key; legacy artifacts (no recorded core count) carry none."""
+    if cores is None:
+        return f"BENCH_LOCAL_r{rnd:02d}.json"
+    return f"BENCH_LOCAL_r{rnd:02d}_c{cores}.json"
+
+
 def _compact_summary(result: dict, here: str, rnd: int) -> dict:
-    """Driver-parseable closing line (≤ 2000 chars): query count, suite
-    total, geomean speedup vs the previous round's local artifact, and
-    the slowest-10 timings. The full per-query dict lives in
-    BENCH_LOCAL_r{N}.json; the driver's stdout capture keeps only a
-    short tail, so this summary is what BENCH_r{N}.json records."""
+    """Driver-parseable closing line (≤ 2000 chars): query count, error
+    count, suite total, geomean speedup vs the previous round's local
+    artifact at the same core count, and the slowest-10 timings. The
+    full per-query dict lives in the local artifact; the driver's stdout
+    capture keeps only a short tail, so this summary is what
+    BENCH_r{N}.json records."""
     timings = result["queries"]
+    cores = result.get("cores")
     slowest = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )
     geomean_vs_prev = None
-    prev = os.path.join(here, f"BENCH_LOCAL_r{rnd - 1:02d}.json")
+    prev = os.path.join(here, _artifact_name(rnd - 1, cores))
     if os.path.exists(prev):
         with open(prev) as fh:
             prev_q = json.load(fh).get("queries", {})
@@ -56,7 +67,9 @@ def _compact_summary(result: dict, here: str, rnd: int) -> dict:
         "value": result["value"],
         "unit": "sec",
         "sf": result["sf"],
+        "cores": cores,
         "n_queries": len(timings),
+        "n_errors": len(result.get("errors", {})),
         "geomean_vs_prev_round": geomean_vs_prev,
         # drift-corrected cross-round ratio (r9 VERDICT item 6): raw
         # geomean divided by the frozen-control drift measured in the
@@ -64,7 +77,7 @@ def _compact_summary(result: dict, here: str, rnd: int) -> dict:
         "control_drift_geomean": drift,
         "geomean_vs_prev_corrected": corrected,
         "queries": slowest,
-        "full_artifact": f"BENCH_LOCAL_r{rnd:02d}.json",
+        "full_artifact": _artifact_name(rnd, cores),
     }
 
 
@@ -401,17 +414,19 @@ GRAPH_QUERIES = (
 # concentrates. Controls run best-of-2 after the same shared-build
 # warm-up protocol the recorded r9 numbers had.
 #
-# When CONTROL_COMMIT is rotated forward, CONTROL_BASELINE must
-# rotate with it — the baseline is the recording made by the control
-# commit's own code in its own round.
+# When CONTROL_COMMIT is rotated forward, CONTROL_BASELINES must
+# rotate with it — a baseline is the recording made by the control
+# commit's own code in its own round. Drift is only defined against a
+# baseline taken at the same core count: a run at any other count
+# records its control timings with drift_geomean null.
 # ---------------------------------------------------------------------------
 CONTROL_COMMIT = "e45c398cf8d161dd839e04148793cbc668ab56d5"  # round 9 final
-CONTROL_BASELINE = "BENCH_LOCAL_r09.json"
+CONTROL_BASELINES = {32: "BENCH_LOCAL_r09.json"}  # cores -> baseline
 CONTROL_WORKTREE = "/tmp/erkg_ctrl_r9"
 # r11 (r10 VERDICT item 7): the panel is stratified by FAMILY so the
 # drift correction reports per-family geomeans, not one global number
 # anchored on ~5% of the suite. Every query exists in the control
-# commit's registry and in CONTROL_BASELINE.
+# commit's registry and in every CONTROL_BASELINES recording.
 CONTROL_FAMILIES = {
     "relational": [
         "q1_pricing_summary",
@@ -492,11 +507,44 @@ spark.stop()
 """
 
 
-def _run_control(here: str, sf_dir: str) -> dict | None:
+def _control_drift(here: str, now: dict, cores: int) -> dict:
+    """Drift of the control panel timings ``now`` against the recorded
+    baseline at the same core count: overall and per-family geomeans of
+    now / baseline, all null when no such baseline exists."""
+    name = CONTROL_BASELINES.get(cores)
+    if name is None:
+        return {
+            "baseline": None,
+            "drift_geomean": None,
+            "drift_by_family": dict.fromkeys(CONTROL_FAMILIES),
+        }
+    with open(os.path.join(here, name)) as fh:
+        base = json.load(fh)["queries"]
+
+    def _geo(qnames) -> float | None:
+        rs = [
+            now[q] / base[q]
+            for q in qnames
+            if q in now and base.get(q, 0) > 0 and now[q] > 0
+        ]
+        if not rs:
+            return None
+        return round(math.exp(sum(math.log(r) for r in rs) / len(rs)), 3)
+
+    return {
+        "baseline": name,
+        "drift_geomean": _geo(CONTROL_PANEL),
+        "drift_by_family": {
+            fam: _geo(qnames) for fam, qnames in CONTROL_FAMILIES.items()
+        },
+    }
+
+
+def _run_control(here: str, sf_dir: str, cores: int) -> dict | None:
     """Time the frozen control commit's panel in this host state;
     returns {"queries": ..., "drift_geomean": ...} or None if the
-    worktree / subprocess / baseline is unavailable (the artifact
-    then records control=null rather than failing the bench)."""
+    worktree / subprocess is unavailable (the artifact then records
+    control=null rather than failing the bench)."""
     import subprocess
 
     if os.environ.get("SPARK_GRAFT_NO_CONTROL"):
@@ -518,27 +566,10 @@ def _run_control(here: str, sf_dir: str) -> dict | None:
             if ln.startswith("CONTROL_JSON:")
         )
         now = json.loads(line[len("CONTROL_JSON:"):])
-        with open(os.path.join(here, CONTROL_BASELINE)) as fh:
-            base = json.load(fh)["queries"]
-        def _geo(qnames) -> float | None:
-            rs = [
-                now[q] / base[q]
-                for q in qnames
-                if q in now and base.get(q, 0) > 0 and now[q] > 0
-            ]
-            if not rs:
-                return None
-            return round(math.exp(sum(math.log(r) for r in rs) / len(rs)), 3)
-
         return {
             "commit": CONTROL_COMMIT,
-            "baseline": CONTROL_BASELINE,
             "queries": now,
-            "drift_geomean": _geo(CONTROL_PANEL),
-            "drift_by_family": {
-                fam: _geo(qnames)
-                for fam, qnames in CONTROL_FAMILIES.items()
-            },
+            **_control_drift(here, now, cores),
         }
     except Exception as exc:  # noqa: BLE001 - diagnostic, not fatal
         print(f"control bench unavailable: {exc}", file=sys.stderr)
@@ -611,6 +642,37 @@ def _bench_hub_clustering(spark, sf_dir: str) -> tuple[dict, dict]:
     g.unpersist()
     nbrs.unpersist()
     return timings, spread
+
+
+def _time_headline(spark, sf_dir: str, names, queries: dict):
+    """Time each named query; returns (timings, spread, errors).
+
+    Best-of-2 per query (JMH-style): the first run pays per-plan codegen
+    compilation; the second is the throughput number. For the expensive
+    iterative graph family, both runs are also recorded as [best, worst]
+    so ambient variance (SCALING.md "Bench variance") is visible in the
+    artifact instead of folded silently into best-of. A query that
+    raises is recorded in ``errors`` as "<Type>: <msg>" and the suite
+    goes on; totals and geomeans then cover only the queries that ran."""
+    timings: dict[str, float] = {}
+    spread: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        fn = queries[name]
+        runs = []
+        try:
+            for _ in range(2):
+                t0 = time.time()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                runs.append(time.time() - t0)
+        except Exception as exc:  # noqa: BLE001 - recorded, not fatal
+            msg = (str(exc).strip().splitlines() or [""])[0][:300]
+            errors[name] = f"{type(exc).__name__}: {msg}"
+            continue
+        timings[name] = round(min(runs), 3)
+        if name in GRAPH_QUERIES and max(runs) > 3.0:
+            spread[name] = [round(min(runs), 3), round(max(runs), 3)]
+    return timings, spread, errors
 
 
 def main() -> None:
@@ -688,7 +750,7 @@ def main() -> None:
     # 3-iteration maintenance path whatever the ambient /tmp state
     # (r10 ADVICE — otherwise cold-cache rounds time the one-off
     # 6-iteration base build and round totals compare warm vs cold).
-    from erkg_tutorials_spark.plans.graphq2 import ensure_prbase
+    from erkg_tutorials_spark.plans.graphq import ensure_prbase
 
     chains = [
         ("graph_invariants", _graph_chain),
@@ -718,23 +780,8 @@ def main() -> None:
             f.result()
     timings["shared_materializations"] = round(time.time() - t0, 3)
 
-    # best-of-2 per query (JMH-style): the first run pays per-plan
-    # codegen compilation; the second is the throughput number. For
-    # the expensive iterative graph family, both runs are also
-    # recorded as [best, worst] so ambient variance (SCALING.md
-    # "Bench variance") is visible in the artifact instead of folded
-    # silently into best-of.
-    spread: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        fn = QUERIES[name]
-        runs = []
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        timings[name] = round(min(runs), 3)
-        if name in GRAPH_QUERIES and max(runs) > 3.0:
-            spread[name] = [round(min(runs), 3), round(max(runs), 3)]
+    headline, spread, errors = _time_headline(spark, sf_dir, HEADLINE, QUERIES)
+    timings.update(headline)
 
     # The synthetic hub-clustering runs are evidence for the wedge-join
     # branch, NOT part of the headline suite: they live in a separate
@@ -743,14 +790,17 @@ def main() -> None:
     hub_timings, hub_spread = _bench_hub_clustering(spark, sf_dir)
 
     here = os.path.dirname(os.path.abspath(__file__))
-    control = _run_control(here, sf_dir)
+    cores = spark.sparkContext.defaultParallelism
+    control = _run_control(here, sf_dir, cores)
 
     total = round(sum(timings.values()), 3)
     result = {
         "metric": "headline_suite_total",
         "value": total,
         "unit": "sec",
+        "cores": cores,
         "queries": timings,
+        "errors": errors,
         "spread": spread,
         "shared_breakdown": shared_breakdown,
         "microbench": {"queries": hub_timings, "spread": hub_spread},
@@ -768,7 +818,7 @@ def main() -> None:
         if (m := re.match(r"BENCH_r(\d+)\.json$", f))
     ]
     rnd = int(os.environ.get("SPARK_GRAFT_ROUND", max(rounds, default=0) + 1))
-    with open(os.path.join(here, f"BENCH_LOCAL_r{rnd:02d}.json"), "w") as fh:
+    with open(os.path.join(here, _artifact_name(rnd, cores)), "w") as fh:
         json.dump(result, fh, indent=1, sort_keys=True)
         fh.write("\n")
     # Full artifact first (local capture / logs), then a compact summary

@@ -93,13 +93,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "list":
         for name in sorted(QUERIES):
             if args.pattern in name:
-                mark = "oracle" if name in ORACLES else "rows-only"
-                print(f"{name}  [{mark}]")
+                print(name)
         return 0
 
     if args.cmd == "oracle":
         if args.query not in ORACLES:
-            print(f"no oracle for {args.query!r}", file=sys.stderr)
+            print(f"unknown query {args.query!r}", file=sys.stderr)
             return 1
         print(ORACLES[args.query])
         return 0

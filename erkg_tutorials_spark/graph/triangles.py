@@ -29,9 +29,9 @@ the per-edge intersection cost — depends on WHICH order:
   set, same outputs; the skewed array simply cannot exist. Costs one
   degree groupBy + two edge⋈degree joins per enumeration.
 
-The default is the ADAPTIVE choice between those two worst-array
+The orientation is the ADAPTIVE choice between those two worst-array
 bounds (max_deg vs sqrt(2m), one tiny aggregate on the data decides
-— see :func:`_orientation`). The r12 measurements forced this: the
+— see :func:`_id_order_suffices`). The r12 measurements forced this: the
 r11 100x bend (triangle 15.4x/decade) was first attributed to id-
 order hub skew, but the co-order graph is near-regular (max_deg 222
 vs sqrt(2m) 1547 at sf0.1 — and copies REPLICATE max_deg while
@@ -44,7 +44,7 @@ Schank-Wagner bound exactly where hubs make it pay.
 
 Measured at sf0.1 (local[32], SCALING.md r7/r12): g_triangle_count
 17.8 s → edge-iterator rewrite; per-vertex and per-edge counts are
-bit-identical to the three-join plan under EVERY orientation (the
+bit-identical to the three-join plan under either orientation (the
 DuckDB oracles are orientation-free and unchanged).
 
 Public algorithm; cf. Schank & Wagner 2005, "Finding, Counting and
@@ -54,63 +54,49 @@ variant), and Cohen 2009 MapReduce triangle counting.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _orientation() -> str:
-    """Edge-orientation strategy: "auto" (default), "degree", or "id".
+def _id_order_suffices(row) -> bool:
+    """Whether id order's worst out-array is at least as tight as degree
+    order's, from a ``(mx, two_m)`` row: the max degree and the degree
+    sum 2m of the edge set.
 
-    All are EXACT (any total vertex order finds each triangle once;
-    all public outputs are orientation-invariant) — the choice only
-    moves the cost:
-    - "id": no orientation pass (the input's canonical u < v order is
-      used as-is); the worst out-array is the graph's max degree.
-    - "degree": out-arrays bounded by sqrt(2m) / arboricity — no hub
-      skew can exist in the adjacency shuffle — at the price of one
-      degree groupBy + two edge⋈degree joins per enumeration
-      (measured 2.0x on the near-regular co-order graph at the 10x
-      step, where the bound buys nothing: max_deg 222 vs sqrt(2m)
-      1547).
-    - "auto": compare the two WORST-ARRAY BOUNDS on the actual data —
-      id's bound is max_deg, degree's is sqrt(2m) — and take the
-      orientation with the smaller one. One degree groupBy + a 2-
-      scalar collect decides it; when degree order wins the degree
-      table is reused for the orientation joins. A near-regular graph
-      (every TPC-H-derived graph here; max_deg <= sqrt(2m) at every
-      copy count, since copies replicate max_deg but grow m) keeps
-      the free id order; a hub graph (max_deg > sqrt(2m)) gets the
-      Schank-Wagner bound exactly when it pays."""
-    return os.environ.get("SPARK_GRAFT_TRI_ORIENT", "auto")
+    Both orders are EXACT (any total vertex order finds each triangle
+    once; all public outputs are orientation-invariant); the choice only
+    moves the cost. Id order pays no orientation pass, and its worst
+    array is max_deg. Degree order bounds every array by sqrt(2m) — no
+    hub skew can exist in the adjacency shuffle — at the price of one
+    degree groupBy + two edge⋈degree joins per enumeration (measured
+    2.0x on the near-regular co-order graph at the 10x step, where the
+    bound buys nothing: max_deg 222 vs sqrt(2m) 1547). So compare the
+    two bounds on the actual data: a near-regular graph (every TPC-H-
+    derived graph here; copies replicate max_deg but grow m) keeps the
+    free id order, and a hub graph (max_deg² > 2m) gets the
+    Schank-Wagner bound exactly when it pays. Equal-bound ties keep id
+    order."""
+    return row["mx"] is None or row["mx"] * row["mx"] <= row["two_m"]
 
 
 def oriented_edges(e: DataFrame) -> DataFrame:
     """Each undirected edge of the canonical (u < v, distinct) edge set
     ``e``, re-oriented so every out-array is bounded: from its
     lower-(degree, id) endpoint to its higher-(degree, id) endpoint
-    when degree order is selected (bound sqrt(2m)), the input id order
-    as-is when that order's bound (max_deg) is already tighter.
-    Bijective on edges either way; see :func:`_orientation` for the
-    selection rule and the SPARK_GRAFT_TRI_ORIENT override."""
-    mode = _orientation()
-    if mode == "id":
-        return e.select("u", "v")
+    (bound sqrt(2m)), or the input id order as-is when that order's
+    bound (max_deg) is already as tight. Bijective on edges either
+    way; see :func:`_id_order_suffices` for the selection rule. When
+    degree order wins, the probe's degree table is reused for the
+    orientation joins."""
     deg = (
         e.select(F.col("u").alias("id"))
         .unionByName(e.select(F.col("v").alias("id")))
         .groupBy("id")
         .agg(F.count("*").alias("deg"))
     )
-    if mode == "auto":
-        row = deg.agg(
-            F.max("deg").alias("mx"), F.sum("deg").alias("two_m")
-        ).collect()[0]
-        # id order's worst array is max_deg; degree order's bound is
-        # sqrt(2m). Equal-bound ties keep id order (it is free).
-        if row["mx"] is None or row["mx"] * row["mx"] <= row["two_m"]:
-            return e.select("u", "v")
+    row = deg.agg(F.max("deg").alias("mx"), F.sum("deg").alias("two_m")).collect()[0]
+    if _id_order_suffices(row):
+        return e.select("u", "v")
     du = deg.select(F.col("id").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("id").alias("v"), F.col("deg").alias("dv"))
     u_first = (F.col("du") < F.col("dv")) | (
@@ -128,7 +114,7 @@ def oriented_edges(e: DataFrame) -> DataFrame:
 
 def _oriented_adjacency(e: DataFrame, nbrs: DataFrame | None) -> DataFrame:
     """(id, nbrs) out-neighbor arrays of ``e`` under the selected
-    orientation (see :func:`_orientation`).
+    orientation (see :func:`_id_order_suffices`).
 
     ``nbrs``: optional caller-materialized FULL adjacency table
     ``(id, ns)`` of the same edge set — sorted distinct neighbor sets,
@@ -139,20 +125,16 @@ def _oriented_adjacency(e: DataFrame, nbrs: DataFrame | None) -> DataFrame:
     enumeration disappears (one Exchange removed from every triangle/
     k-truss round-0 plan). Same elements per array (edges are
     distinct, so collect_list = the neighbor set; intersections are
-    order-insensitive). The "auto" probe also reads the memo
+    order-insensitive). The orientation probe also reads the memo
     (max/sum of array sizes = max_deg / 2m) instead of re-aggregating
     the edge union. Degree orientation keeps the build from ``e``
     (the filtered-array shortcut only expresses id order)."""
-    mode = _orientation()
-    if nbrs is not None and mode in ("id", "auto"):
-        use_id = True
-        if mode == "auto":
-            row = nbrs.agg(
-                F.max(F.size("ns")).alias("mx"),
-                F.sum(F.size("ns")).alias("two_m"),
-            ).collect()[0]
-            use_id = row["mx"] is None or row["mx"] * row["mx"] <= row["two_m"]
-        if use_id:
+    if nbrs is not None:
+        row = nbrs.agg(
+            F.max(F.size("ns")).alias("mx"),
+            F.sum(F.size("ns")).alias("two_m"),
+        ).collect()[0]
+        if _id_order_suffices(row):
             return nbrs.select(
                 "id",
                 F.filter("ns", lambda x: x > F.col("id")).alias("nbrs"),

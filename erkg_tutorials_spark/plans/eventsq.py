@@ -13,21 +13,9 @@ from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
 from erkg_tutorials_spark.functions.exact_math import exact_money_sum, money_cents
-
-QUERIES: dict = {}
-ORACLES: dict = {}
+from erkg_tutorials_spark.plans.registry import register
 
 SESSION_GAP_SECONDS = 1800
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 @register(
@@ -228,8 +216,6 @@ def events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_moving_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7-day moving average of daily event counts via a range-bounded window."""
-    from erkg_tutorials_spark.functions.exact_math import money_cents
-
     e = load_tables(spark, sf_dir)["events"].select(
         "event_type",
         F.expr("ts_sec div 86400").alias("day"),
@@ -310,8 +296,6 @@ def scd2_user_state_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_stratified_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sample per event type using md5-derived uniform coins."""
-    from erkg_tutorials_spark.functions.exact_math import money_cents
-
     e = load_tables(spark, sf_dir)["events"]
     bucket = (
         F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 6), 16, 10)
@@ -359,8 +343,6 @@ def sample_stratified_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily event-count anomalies: z-score vs each type's mean/stddev, flagged beyond 3 sigma."""
-    from erkg_tutorials_spark.functions.exact_math import money_cents
-
     e = load_tables(spark, sf_dir)["events"].select(
         "event_id", "event_type", money_cents(F.col("value")).alias("c")
     )
@@ -532,8 +514,6 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_calendar_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar heatmap cells: event counts per (day-of-week, hour-of-day) bucket."""
-    from erkg_tutorials_spark.functions.exact_math import money_cents
-
     e = load_tables(spark, sf_dir)["events"]
     ts = F.timestamp_micros(F.expr("ts_ns div 1000"))
     return (
@@ -762,7 +742,6 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential pass. Truncation error vs the unbounded recursion is
     < 2^-40 of the oldest dropped term — unobservable at 4dp."""
     e = load_tables(spark, sf_dir)["events"]
-    from erkg_tutorials_spark.functions.exact_math import money_cents
 
     daily = (
         e.select(
@@ -976,4 +955,682 @@ def events_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
             F.count("*").alias("n_touches"),
             F.sum("millicents").alias("credit_millicents"),
         )
+    )
+
+
+# ===========================================================================
+# Event analytics: CUSUM changepoint detection and
+# sequential-pattern mining (PrefixSpan-style, bounded length) over the
+# events table — the monitoring/mining verbs a training-data pipeline
+# runs against its ingest telemetry.
+#
+# Both stay exact-integer (or integer-ratio) end to end so the DuckDB
+# oracles are full hash matches, following the repo's exact-math oracle
+# discipline (functions/exact_math.py).
+# ===========================================================================
+
+
+# ---------------------------------------------------------------------------
+# CUSUM changepoint detection over per-type daily event counts.
+#
+# The one-sided CUSUM recurrence S_t = max(0, S_{t-1} + x_t - μ - k)
+# is not a window function, but its reflection identity is:
+#   S_t = P_t - min(0, min_{j≤t} P_j),  P_t = Σ_{i≤t} (x_i - μ - k)
+# i.e. one running sum + one running min — two ordered windows per
+# key, no recursion, no UDF. At 100 TB this is a single shuffle on
+# event_type and two sorted window passes over tiny per-type daily
+# series (days-per-type rows, not events).
+#
+# Exactness: μ = s/n and k = μ/4 are rationals, so everything is
+# multiplied through by 4n: y' = 4n·x − 5·s is a BIGINT, the threshold
+# 2μ scales to h' = 8·s, and the oracle hash-matches bit for bit.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "events_cusum_changepoint",
+    """
+    WITH d AS (
+      SELECT event_type,
+             CAST(FLOOR(epoch(ts)) AS BIGINT) // 86400 AS day,
+             CAST(COUNT(*) AS BIGINT) AS x
+      FROM events GROUP BY 1, 2
+    ),
+    st AS (
+      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(x) AS BIGINT) AS s
+      FROM d GROUP BY 1
+    ),
+    y AS (
+      SELECT d.event_type, d.day, 4 * st.n * d.x - 5 * st.s AS yv,
+             8 * st.s AS h
+      FROM d JOIN st USING (event_type)
+    ),
+    p AS (
+      SELECT *, CAST(SUM(yv) OVER (PARTITION BY event_type ORDER BY day
+                                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS pf
+      FROM y
+    ),
+    cus AS (
+      SELECT event_type, day, h,
+             pf - LEAST(0, MIN(pf) OVER (PARTITION BY event_type ORDER BY day
+                                         ROWS UNBOUNDED PRECEDING)) AS cusum
+      FROM p
+    ),
+    ranked AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
+                                   ORDER BY cusum DESC, day) AS rn
+      FROM cus
+    )
+    SELECT event_type, day, cusum AS cusum_scaled,
+           cusum > h AS flagged, CAST(rn AS BIGINT) AS rnk
+    FROM ranked WHERE rn <= 3
+    """,
+)
+def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 CUSUM peaks per event type over daily counts (reflection identity: running sum minus running min, exact 4n-scaled integers), with the 2-mean threshold flag."""
+    t = load_tables(spark, sf_dir)
+    d = (
+        t["events"]
+        .groupBy(
+            "event_type", F.expr("ts_sec div 86400").alias("day")
+        )
+        .agg(F.count("*").alias("x"))
+    )
+    st = d.groupBy("event_type").agg(
+        F.count("*").alias("n"), F.sum("x").alias("s")
+    )
+    y = d.join(F.broadcast(st), "event_type").select(
+        "event_type",
+        "day",
+        (4 * F.col("n") * F.col("x") - 5 * F.col("s")).alias("yv"),
+        (8 * F.col("s")).alias("h"),
+    )
+    ow = (
+        Window.partitionBy("event_type")
+        .orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cus = y.withColumn("pf", F.sum("yv").over(ow)).select(
+        "event_type",
+        "day",
+        "h",
+        (
+            F.col("pf")
+            - F.least(F.lit(0).cast("long"), F.min("pf").over(ow))
+        ).alias("cusum"),
+    )
+    rw = Window.partitionBy("event_type").orderBy(
+        F.desc("cusum"), F.asc("day")
+    )
+    return (
+        cus.withColumn("rn", F.row_number().over(rw))
+        .where(F.col("rn") <= 3)
+        .select(
+            "event_type",
+            "day",
+            F.col("cusum").alias("cusum_scaled"),
+            (F.col("cusum") > F.col("h")).alias("flagged"),
+            F.col("rn").cast("long").alias("rnk"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sequential-pattern mining (PrefixSpan-style, lengths 2 and 3): which
+# ordered event-type subsequences (not necessarily contiguous) occur in
+# at least MIN_SUPPORT_PCT of users' histories. The itemset twin is
+# basket_association_rules; this is the SEQUENCE miner.
+#
+# Encoding: per-user position ranks (ROW_NUMBER over (ts_ns, event_id))
+# reduce subsequence-existence to integer comparisons on per-(user,
+# type) min/max positions — a→b exists iff min_pos(a) < max_pos(b),
+# a→b→c iff some b-occurrence sits strictly between min_pos(a) and
+# max_pos(c). No per-user sequence materialization, no UDF.
+#
+# Scale: the pair stage joins two |users|×|types| aggregate tables on
+# user (|types| is a small fixed vocabulary, so the fan-out per user is
+# |types|² — constant); the triple stage additionally touches each raw
+# occurrence once per (a, c) pair — O(|events|·|types|²) with map-side
+# combine into the distinct-user count. One shuffle each on user_id.
+# ---------------------------------------------------------------------------
+MIN_SUPPORT_PCT = 30
+
+
+def _seq_oracle() -> str:
+    return f"""
+    WITH occ AS MATERIALIZED (
+      SELECT user_id, event_type,
+             CAST(ROW_NUMBER() OVER (PARTITION BY user_id
+                                     ORDER BY epoch_ns(ts), event_id)
+                  AS BIGINT) AS pos
+      FROM events
+    ),
+    agg AS MATERIALIZED (
+      SELECT user_id, event_type, MIN(pos) AS minp, MAX(pos) AS maxp
+      FROM occ GROUP BY 1, 2
+    ),
+    tot AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS nu FROM occ),
+    pairs AS (
+      SELECT a.event_type AS ta, b.event_type AS tb,
+             CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_users
+      FROM agg a JOIN agg b ON a.user_id = b.user_id
+      WHERE a.minp < b.maxp
+      GROUP BY 1, 2
+    ),
+    triples AS (
+      SELECT a.event_type AS ta, o.event_type AS tb, c.event_type AS tc,
+             CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_users
+      FROM agg a
+      JOIN occ o ON o.user_id = a.user_id AND o.pos > a.minp
+      JOIN agg c ON c.user_id = a.user_id AND c.maxp > o.pos
+      GROUP BY 1, 2, 3
+    ),
+    unioned AS (
+      SELECT ta || '>' || tb AS pattern, CAST(2 AS INTEGER) AS length,
+             n_users
+      FROM pairs
+      UNION ALL
+      SELECT ta || '>' || tb || '>' || tc AS pattern,
+             CAST(3 AS INTEGER) AS length, n_users
+      FROM triples
+    )
+    SELECT pattern, length, n_users,
+           ROUND(n_users * 100.0 / tot.nu, 2) AS support_pct
+    FROM unioned CROSS JOIN tot
+    WHERE n_users * 100 >= {MIN_SUPPORT_PCT} * tot.nu
+    """
+
+
+@register("seq_pattern_mining", _seq_oracle())
+def seq_pattern_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent ordered event-type subsequences of length 2 and 3 (PrefixSpan-style support mining over per-user position ranks, >=30% user support)."""
+    t = load_tables(spark, sf_dir)
+    ow = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
+    occ = t["events"].select(
+        "user_id",
+        "event_type",
+        F.row_number().over(ow).cast("long").alias("pos"),
+    )
+    agg = occ.groupBy("user_id", "event_type").agg(
+        F.min("pos").alias("minp"), F.max("pos").alias("maxp")
+    )
+    tot = occ.agg(
+        F.count_distinct("user_id").cast("long").alias("nu")
+    )
+    a = agg.select(
+        "user_id", F.col("event_type").alias("ta"), F.col("minp").alias("aminp")
+    )
+    b = agg.select(
+        "user_id", F.col("event_type").alias("tb"), F.col("maxp").alias("bmaxp")
+    )
+    pairs = (
+        a.join(b, "user_id")
+        .where(F.col("aminp") < F.col("bmaxp"))
+        .groupBy("ta", "tb")
+        .agg(F.count_distinct("user_id").cast("long").alias("n_users"))
+        .select(
+            F.concat_ws(">", "ta", "tb").alias("pattern"),
+            F.lit(2).alias("length"),
+            "n_users",
+        )
+    )
+    o = occ.select(
+        "user_id", F.col("event_type").alias("tb"), F.col("pos").alias("bpos")
+    )
+    c = agg.select(
+        "user_id", F.col("event_type").alias("tc"), F.col("maxp").alias("cmaxp")
+    )
+    triples = (
+        a.join(o, "user_id")
+        .where(F.col("bpos") > F.col("aminp"))
+        .join(c, "user_id")
+        .where(F.col("cmaxp") > F.col("bpos"))
+        .groupBy("ta", "tb", "tc")
+        .agg(F.count_distinct("user_id").cast("long").alias("n_users"))
+        .select(
+            F.concat_ws(">", "ta", "tb", "tc").alias("pattern"),
+            F.lit(3).alias("length"),
+            "n_users",
+        )
+    )
+    unioned = pairs.unionByName(triples).crossJoin(F.broadcast(tot))
+    return unioned.where(
+        F.col("n_users") * 100 >= MIN_SUPPORT_PCT * F.col("nu")
+    ).select(
+        "pattern",
+        "length",
+        "n_users",
+        F.round(F.col("n_users") * 100.0 / F.col("nu"), 2).alias(
+            "support_pct"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Benford first-digit audit — the classic data-quality screen for
+# fabricated or truncated numeric feeds (naturally-grown monetary
+# amounts follow log10(1+1/d); synthetic uniform ones do not). The
+# digit is extracted from exact integer cents via string length (no
+# float log on data), and the Benford expectations are inlined
+# integer ppm constants, so the whole audit is exact arithmetic.
+# One groupBy on a 9-value key; at 100 TB the map-side combine
+# reduces everything before one tiny exchange.
+# ---------------------------------------------------------------------------
+_BENFORD_PPM = {
+    1: 301030, 2: 176091, 3: 124939, 4: 96910, 5: 79181,
+    6: 66947, 7: 57992, 8: 51153, 9: 45757,
+}
+
+
+def _benford_oracle() -> str:
+    vals = ", ".join(f"({d}, {p})" for d, p in _BENFORD_PPM.items())
+    return f"""
+    WITH cents AS (
+      SELECT CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS c FROM orders
+    ),
+    digits AS (
+      SELECT c // CAST(POWER(10, LENGTH(CAST(c AS VARCHAR)) - 1) AS BIGINT)
+               AS digit
+      FROM cents WHERE c > 0
+    ),
+    obs AS (
+      SELECT digit, CAST(COUNT(*) AS BIGINT) AS n_obs FROM digits GROUP BY 1
+    ),
+    tot AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n FROM obs),
+    exp_tbl(digit, expected_ppm) AS (VALUES {vals})
+    SELECT e.digit, COALESCE(o.n_obs, 0) AS n_obs,
+           CAST(e.expected_ppm AS BIGINT) AS expected_ppm,
+           CAST(ROUND(COALESCE(o.n_obs, 0) * 1000000.0 / tot.n, 0) AS BIGINT)
+             AS obs_ppm,
+           CAST(ROUND(COALESCE(o.n_obs, 0) * 1000000.0 / tot.n, 0) AS BIGINT)
+             - e.expected_ppm AS delta_ppm
+    FROM exp_tbl e LEFT JOIN obs o ON o.digit = e.digit CROSS JOIN tot
+    """
+
+
+@register("dq_benford_digits", _benford_oracle())
+def dq_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benford first-digit audit of order totals: observed vs expected ppm per leading digit, exact integer arithmetic end to end."""
+    t = load_tables(spark, sf_dir)
+    cents = t["orders"].select(
+        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("c")
+    ).where(F.col("c") > 0)
+    digits = cents.select(
+        (
+            F.col("c")
+            / F.pow(
+                F.lit(10.0), F.length(F.col("c").cast("string")) - 1
+            ).cast("long")
+        )
+        .cast("long")
+        .alias("digit")
+    )
+    obs = digits.groupBy("digit").agg(F.count("*").cast("long").alias("n_obs"))
+    tot = obs.agg(F.sum("n_obs").cast("long").alias("n"))
+    exp_rows = [(d, p) for d, p in _BENFORD_PPM.items()]
+    exp_tbl = digits.sparkSession.createDataFrame(
+        exp_rows, "digit long, expected_ppm long"
+    )
+    joined = (
+        exp_tbl.join(obs, "digit", "left")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "digit",
+            F.coalesce("n_obs", F.lit(0).cast("long")).alias("n_obs"),
+            "expected_ppm",
+            F.round(
+                F.coalesce("n_obs", F.lit(0).cast("long"))
+                * 1000000.0
+                / F.col("n"),
+                0,
+            )
+            .cast("long")
+            .alias("obs_ppm"),
+        )
+    )
+    return joined.withColumn(
+        "delta_ppm", F.col("obs_ppm") - F.col("expected_ppm")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Classical seasonal decomposition (moving-average STL-lite) of the
+# per-type daily count series: trend = centered 7-day moving sum
+# (only where the window is fully populated), seasonal = day-of-week
+# mean of the detrended series, remainder = what's left. Everything
+# stays in scaled integers — detrended d7 = 7·x − trend7_sum carries
+# an implicit /7, the residual carries an implicit /(7·s_cnt) — so the
+# oracle hash-matches exactly (no float MA, no float means).
+#
+# Scale: one groupBy(event_type, day) over the raw events (map-side
+# combinable), then two window passes over the tiny per-type daily
+# series and one broadcast-size (type × 7)-row seasonal join. The
+# expensive input shuffle is the same single shuffle CUSUM pays.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "events_seasonal_decompose",
+    """
+    WITH d AS (
+      SELECT event_type,
+             CAST(FLOOR(epoch(ts)) AS BIGINT) // 86400 AS day,
+             CAST(COUNT(*) AS BIGINT) AS x
+      FROM events GROUP BY 1, 2
+    ),
+    tr AS (
+      SELECT *,
+             CAST(SUM(x) OVER w AS BIGINT) AS w_sum,
+             CAST(COUNT(*) OVER w AS BIGINT) AS w_cnt
+      FROM d
+      WINDOW w AS (PARTITION BY event_type ORDER BY day
+                   RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)
+    ),
+    det AS (
+      SELECT event_type, day, x,
+             CASE WHEN w_cnt = 7 THEN w_sum END AS trend7_sum,
+             CASE WHEN w_cnt = 7 THEN 7 * x - w_sum END AS d7,
+             day % 7 AS dow
+      FROM tr
+    ),
+    seas AS (
+      SELECT event_type, dow,
+             CAST(SUM(d7) AS BIGINT) AS s_sum,
+             CAST(COUNT(d7) AS BIGINT) AS s_cnt
+      FROM det GROUP BY 1, 2
+    )
+    SELECT t.event_type, t.day, t.x, t.trend7_sum, t.d7, t.dow,
+           s.s_sum, s.s_cnt,
+           t.d7 * s.s_cnt - s.s_sum AS resid_scaled
+    FROM det t JOIN seas s
+      ON s.event_type = t.event_type AND s.dow = t.dow
+    """,
+)
+def events_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Moving-average seasonal decomposition of per-type daily counts: centered 7-day trend sum, day-of-week seasonal mean, scaled-integer residual."""
+    t = load_tables(spark, sf_dir)
+    d = (
+        t["events"]
+        .groupBy("event_type", F.expr("ts_sec div 86400").alias("day"))
+        .agg(F.count("*").cast("long").alias("x"))
+    )
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("day")
+        .rangeBetween(-3, 3)
+    )
+    tr = d.withColumn("w_sum", F.sum("x").over(w).cast("long")).withColumn(
+        "w_cnt", F.count("*").over(w).cast("long")
+    )
+    full = F.col("w_cnt") == 7
+    det = tr.select(
+        "event_type",
+        "day",
+        "x",
+        F.when(full, F.col("w_sum")).alias("trend7_sum"),
+        F.when(full, 7 * F.col("x") - F.col("w_sum")).alias("d7"),
+        (F.col("day") % 7).alias("dow"),
+    )
+    seas = det.groupBy("event_type", "dow").agg(
+        F.sum("d7").cast("long").alias("s_sum"),
+        F.count("d7").cast("long").alias("s_cnt"),
+    )
+    return det.join(F.broadcast(seas), ["event_type", "dow"]).select(
+        "event_type",
+        "day",
+        "x",
+        "trend7_sum",
+        "d7",
+        "dow",
+        "s_sum",
+        "s_cnt",
+        (F.col("d7") * F.col("s_cnt") - F.col("s_sum")).alias(
+            "resid_scaled"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Autocorrelation function of the per-type daily count series, lags
+# 1..7 — the diagnostic that tells an ingest-monitoring pipeline
+# whether its volume series has weekly structure worth a seasonal
+# model. Exactness: with n days and total s per type, the scaled
+# deviation dev_t = n·x_t − s is a BIGINT carrying an implicit /n, so
+# num_k = Σ dev_t·dev_{t+k} and den = Σ dev_t² are exact integers and
+# the lag-k autocorrelation is num/den with the scaling cancelled.
+# Magnitude bound: |dev| ≤ n·max(x), so num ≤ days·(n·max_x)² —
+# ~3e15 even at sf100 for this series shape, inside BIGINT.
+#
+# Scale: the lag pairs come from ONE self-join of the tiny per-type
+# daily table on (event_type, 1 ≤ Δday ≤ 7) — days-per-type rows, not
+# events — so the only event-scale work is the same daily-count
+# shuffle the other monitoring verbs share.
+# ---------------------------------------------------------------------------
+ACF_MAX_LAG = 7
+
+
+@register(
+    "events_autocorrelation",
+    f"""
+    WITH d AS (
+      SELECT event_type,
+             CAST(FLOOR(epoch(ts)) AS BIGINT) // 86400 AS day,
+             CAST(COUNT(*) AS BIGINT) AS x
+      FROM events GROUP BY 1, 2
+    ),
+    st AS (
+      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(x) AS BIGINT) AS s
+      FROM d GROUP BY 1
+    ),
+    dev AS (
+      SELECT d.event_type, d.day, d.n * d.x - d.s AS dv
+      FROM (SELECT d.*, st.n, st.s FROM d JOIN st USING (event_type)) d
+    ),
+    den AS (
+      SELECT event_type, CAST(SUM(dv * dv) AS BIGINT) AS den_scaled
+      FROM dev GROUP BY 1
+    ),
+    num AS (
+      SELECT a.event_type, b.day - a.day AS lag,
+             CAST(COUNT(*) AS BIGINT) AS n_pairs,
+             CAST(SUM(a.dv * b.dv) AS BIGINT) AS num_scaled
+      FROM dev a JOIN dev b
+        ON b.event_type = a.event_type
+       AND b.day > a.day AND b.day <= a.day + {ACF_MAX_LAG}
+      GROUP BY 1, 2
+    )
+    SELECT n.event_type, n.lag, n.n_pairs, n.num_scaled, d.den_scaled
+    FROM num n JOIN den d USING (event_type)
+    """,
+)
+def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-integer autocorrelation of per-type daily counts at lags 1..7: scaled deviation products (num_scaled/den_scaled carries the lag-k ACF)."""
+    t = load_tables(spark, sf_dir)
+    d = (
+        t["events"]
+        .groupBy("event_type", F.expr("ts_sec div 86400").alias("day"))
+        .agg(F.count("*").cast("long").alias("x"))
+    )
+    st = d.groupBy("event_type").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("x").cast("long").alias("s"),
+    )
+    dev = d.join(F.broadcast(st), "event_type").select(
+        "event_type",
+        "day",
+        (F.col("n") * F.col("x") - F.col("s")).alias("dv"),
+    )
+    den = dev.groupBy("event_type").agg(
+        F.sum(F.col("dv") * F.col("dv")).cast("long").alias("den_scaled")
+    )
+    a = dev.select(
+        "event_type", F.col("day").alias("a_day"), F.col("dv").alias("a_dv")
+    )
+    b = dev.select(
+        "event_type", F.col("day").alias("b_day"), F.col("dv").alias("b_dv")
+    )
+    num = (
+        a.join(
+            b,
+            [
+                a.event_type == b.event_type,
+                b.b_day > a.a_day,
+                b.b_day <= a.a_day + ACF_MAX_LAG,
+            ],
+        )
+        .select(
+            a.event_type.alias("event_type"),
+            (F.col("b_day") - F.col("a_day")).alias("lag"),
+            (F.col("a_dv") * F.col("b_dv")).alias("prod"),
+        )
+        .groupBy("event_type", "lag")
+        .agg(
+            F.count("*").cast("long").alias("n_pairs"),
+            F.sum("prod").cast("long").alias("num_scaled"),
+        )
+    )
+    return num.join(F.broadcast(den), "event_type").select(
+        "event_type", "lag", "n_pairs", "num_scaled", "den_scaled"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Approximate quantiles from a fixed-grid histogram — the one-pass,
+# MERGEABLE scale path next to the exact sort-based
+# events_value_quantiles/exact_percentiles_orders: per-partition
+# 64-bin counts merge by addition (the property t-digest/KLL trade
+# determinism for; a fixed grid keeps bit-exact determinism instead),
+# so at 100 TB the only shuffle is 64 counters per key. Estimation
+# error is bounded by one bin width; the bound is asserted against
+# the exact quantiles in tests. All arithmetic is the same double
+# expression tree in both engines (grid edges from min/max, linear
+# interpolation inside the hit bin), rounded to 6dp at the end.
+# ---------------------------------------------------------------------------
+HIST_BINS = 64
+HIST_QS = (25, 50, 75, 90)
+
+
+@register(
+    "approx_quantiles_histogram",
+    f"""
+    WITH v AS (
+      SELECT event_type, CAST(value AS DOUBLE) AS val FROM events
+    ),
+    st AS (
+      SELECT event_type, MIN(val) AS mn, MAX(val) AS mx,
+             CAST(COUNT(*) AS BIGINT) AS n
+      FROM v GROUP BY 1
+    ),
+    binned AS (
+      SELECT v.event_type,
+             LEAST({HIST_BINS - 1}, GREATEST(0, CAST(FLOOR(
+               (v.val - st.mn) * {HIST_BINS} / (st.mx - st.mn)
+             ) AS BIGINT))) AS bin
+      FROM v JOIN st USING (event_type)
+    ),
+    hist AS (
+      SELECT event_type, bin, CAST(COUNT(*) AS BIGINT) AS c
+      FROM binned GROUP BY 1, 2
+    ),
+    cum AS (
+      SELECT event_type, bin, c,
+             CAST(SUM(c) OVER (PARTITION BY event_type ORDER BY bin
+                               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cc
+      FROM hist
+    ),
+    qs AS (
+      SELECT q FROM (VALUES {", ".join(f"({q})" for q in HIST_QS)}) t(q)
+    ),
+    tgt AS (
+      SELECT st.event_type, qs.q,
+             CAST(st.n * qs.q AS BIGINT) AS num, st.n, st.mn, st.mx
+      FROM st CROSS JOIN qs
+    ),
+    hit AS (
+      SELECT t.event_type, t.q, t.mn, t.mx, c.bin, c.c, c.cc,
+             c.cc - c.c AS prev
+      FROM tgt t JOIN cum c ON c.event_type = t.event_type
+      WHERE c.cc * 100 >= t.num AND (c.cc - c.c) * 100 < t.num
+    )
+    SELECT event_type, CAST(q AS BIGINT) AS q,
+           ROUND(mn + (bin + (
+             (CAST(q AS DOUBLE) / 100.0) * (
+               SELECT n FROM st s WHERE s.event_type = hit.event_type
+             ) - prev
+           ) / c) * (mx - mn) / {HIST_BINS}, 6) AS est
+    FROM hit
+    """,
+)
+def approx_quantiles_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate per-type value quantiles (p25/50/75/90) from a mergeable fixed 64-bin histogram with linear in-bin interpolation."""
+    t = load_tables(spark, sf_dir)
+    v = t["events"].select(
+        "event_type", F.col("value").cast("double").alias("val")
+    )
+    st = v.groupBy("event_type").agg(
+        F.min("val").alias("mn"),
+        F.max("val").alias("mx"),
+        F.count("*").cast("long").alias("n"),
+    )
+    binned = v.join(F.broadcast(st), "event_type").select(
+        "event_type",
+        F.least(
+            F.lit(HIST_BINS - 1),
+            F.greatest(
+                F.lit(0).cast("long"),
+                F.floor(
+                    (F.col("val") - F.col("mn"))
+                    * HIST_BINS
+                    / (F.col("mx") - F.col("mn"))
+                ).cast("long"),
+            ),
+        ).alias("bin"),
+    )
+    hist = binned.groupBy("event_type", "bin").agg(
+        F.count("*").cast("long").alias("c")
+    )
+    wc = (
+        Window.partitionBy("event_type")
+        .orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cum = hist.withColumn("cc", F.sum("c").over(wc).cast("long"))
+    # literal quantile list as a JVM-side explode (a createDataFrame
+    # literal would plan an applySchemaToPythonRDD scan)
+    qs = v.sparkSession.range(1).select(
+        F.explode(
+            F.array(*[F.lit(q).cast("long") for q in HIST_QS])
+        ).alias("q")
+    )
+    tgt = st.crossJoin(F.broadcast(qs)).select(
+        "event_type",
+        "q",
+        (F.col("n") * F.col("q")).cast("long").alias("num"),
+        "n",
+        "mn",
+        "mx",
+    )
+    hit = tgt.join(cum, "event_type").where(
+        (F.col("cc") * 100 >= F.col("num"))
+        & ((F.col("cc") - F.col("c")) * 100 < F.col("num"))
+    )
+    return hit.select(
+        "event_type",
+        F.col("q").cast("long").alias("q"),
+        F.round(
+            F.col("mn")
+            + (
+                F.col("bin")
+                + (
+                    F.col("q").cast("double") / 100.0 * F.col("n")
+                    - (F.col("cc") - F.col("c"))
+                )
+                / F.col("c")
+            )
+            * (F.col("mx") - F.col("mn"))
+            / HIST_BINS,
+            6,
+        ).alias("est"),
     )

@@ -52,21 +52,9 @@ from pyspark.sql import functions as F
 from erkg_tutorials_spark.catalog import load_tables
 from erkg_tutorials_spark.graph.khop import k_hop
 from erkg_tutorials_spark.plans.graphq import seed_customers, trade_edges_sym
+from erkg_tutorials_spark.plans.registry import register
+
 E1_BLOCKLIST = "(13)|(42$)|(007)"  # F1 shape: OR-ed regex blocklist on the name
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 _E1_ORACLE = f"""
     WITH seeds AS (

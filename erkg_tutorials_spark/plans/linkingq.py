@@ -51,21 +51,8 @@ from pyspark.sql import functions as F
 from erkg_tutorials_spark.catalog import load_tables
 from erkg_tutorials_spark.linking.candidates import char_ngrams
 from erkg_tutorials_spark.linking.embed import cosine
+from erkg_tutorials_spark.plans.registry import register
 from erkg_tutorials_spark.text.phrase_match import match_phrases
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 E3_DOC_BOUND = 30  # same corpus slice as g5_textrank_phrases
 

@@ -27,22 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
-
-QUERIES: dict = {}
-ORACLES: dict = {}
+from erkg_tutorials_spark.plans.registry import register
 
 HEX = "0123456789abcdef"
 PHASH_MAX_HAMMING = 6
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def planted_media(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,19 +36,7 @@ from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
 from erkg_tutorials_spark.functions.exact_math import money_cents
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from erkg_tutorials_spark.plans.registry import register
 
 
 def _geom_draw_spark(salt: str, key):

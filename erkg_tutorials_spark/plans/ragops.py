@@ -21,19 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from erkg_tutorials_spark.plans.registry import register
 
 
 # ---------------------------------------------------------------------------

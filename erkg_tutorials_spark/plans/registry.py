@@ -1,71 +1,45 @@
-"""Aggregated query registry: every implemented operator's query and
-its DuckDB oracle twin (driver contract, see /root/repo/__spark_entry__.py).
+"""The query registry: every implemented operator's query and its
+DuckDB oracle twin (driver contract, see ``__spark_entry__.py``).
+
+Plan modules decorate each query with ``@register(name, oracle)``.
+The family imports at the bottom run those decorators, so ``QUERIES``
+lists the queries in first-import order.
 """
 
 from __future__ import annotations
 
-from erkg_tutorials_spark.plans import (
-    analytics,
-    analytics2,
-    analytics3,
-    coverage,
-    coverage2,
-    eventsq,
-    eventsq2,
-    graphq,
-    graphq2,
-    lakeops,
-    lifecycle,
-    linkingq,
-    llmops,
-    llmops2,
-    mediaq,
-    privacyq,
-    ragops,
-    relational,
-    relational2,
-    relational3,
-    scale,
-    spark4q,
-    streamq,
-    temporal,
-    textq,
-    vectorq,
-    vectorq2,
-)
-
-_MODULES = (
-    relational,
-    relational2,
-    relational3,
-    scale,
-    spark4q,
-    lakeops,
-    llmops,
-    llmops2,
-    ragops,
-    graphq,
-    graphq2,
-    lifecycle,
-    linkingq,
-    mediaq,
-    textq,
-    vectorq,
-    vectorq2,
-    eventsq,
-    eventsq2,
-    streamq,
-    temporal,
-    analytics,
-    analytics2,
-    analytics3,
-    privacyq,
-    coverage,
-    coverage2,
-)
-
 QUERIES: dict = {}
 ORACLES: dict = {}
-for _m in _MODULES:
-    QUERIES.update(_m.QUERIES)
-    ORACLES.update(_m.ORACLES)
+
+
+def register(name: str, oracle: str):
+    def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
+        QUERIES[name] = fn
+        ORACLES[name] = oracle
+        return fn
+
+    return deco
+
+
+from erkg_tutorials_spark.plans import (  # noqa: E402  (modules register on import)
+    analytics,
+    coverage,
+    eventsq,
+    graphq,
+    lakeops,
+    lifecycle,
+    linkingq,
+    llmops,
+    mediaq,
+    privacyq,
+    ragops,
+    relational,
+    scale,
+    spark4q,
+    streamq,
+    temporal,
+    textq,
+    vectorq,
+)

@@ -89,6 +89,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from erkg_tutorials_spark.plans.registry import register
 from erkg_tutorials_spark.streaming.events import (
     EVENTS_SCHEMA,
     EVENTS_SCHEMA_NANOS,
@@ -98,19 +99,6 @@ from erkg_tutorials_spark.streaming.events import (
 )
 from erkg_tutorials_spark.streaming.joins import attribution_stream
 from erkg_tutorials_spark.streaming.sessionize import sessionize_stream
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # Monotone suffix so repeated invocations in one session never collide

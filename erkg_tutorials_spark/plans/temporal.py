@@ -30,25 +30,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
-from erkg_tutorials_spark.functions.exact_math import exact_money_sum, money_cents
-
-QUERIES: dict = {}
-ORACLES: dict = {}
+from erkg_tutorials_spark.functions.exact_math import money_cents
+from erkg_tutorials_spark.plans.registry import register
 
 ATTRIBUTION_WINDOW_SECONDS = 3600
 
 # DuckDB epoch-second extraction identical to catalog.read_events' ts_sec
 _SEC = "CAST(FLOOR(epoch(ts)) AS BIGINT)"
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from erkg_tutorials_spark.catalog import load_tables
 from erkg_tutorials_spark.dedup.exact import exact_dedup
 from erkg_tutorials_spark.dedup.minhash import minhash_lsh_dedup
+from erkg_tutorials_spark.plans.registry import register
 from erkg_tutorials_spark.text.quality import (
     LANG_MARKERS,
     STOPWORDS_EN,
@@ -20,19 +21,6 @@ from erkg_tutorials_spark.text.quality import (
     quality_z_sql,
     token_counts,
 )
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 @register(
@@ -51,7 +39,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared by dedup_minhash_lsh (below) and dedup_clusters
-# (plans/coverage2.py), which consumes the same pair set. Ends with
+# (plans/coverage.py), which consumes the same pair set. Ends with
 # ``pairs(id_a, id_b, jaccard)``; every stage MATERIALIZED so the
 # cluster oracle's label-propagation chain doesn't re-inline the
 # shingle explosion per round.
@@ -888,7 +876,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Two-pass exact heavy hitters: Misra–Gries candidate generation in
 # bounded memory (one Arrow mapInPandas pass keeping at most K
-# counters per partition — analytics2.misra_gries_candidates) followed
+# counters per partition — analytics.misra_gries_candidates) followed
 # by an EXACT count of the candidate set only. The classic 100 TB
 # pattern for "which tokens exceed a frequency share" when token
 # cardinality dwarfs executor memory: MG(K) on a partition retains
@@ -924,7 +912,7 @@ def _heavy_hitters_oracle() -> str:
 @register("heavy_hitters_tokens", _heavy_hitters_oracle())
 def heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact heavy-hitter tokens via bounded-memory Misra-Gries candidates plus an exact verification count of the candidate set."""
-    from erkg_tutorials_spark.plans.analytics2 import misra_gries_candidates
+    from erkg_tutorials_spark.plans.analytics import misra_gries_candidates
 
     docs = load_tables(spark, sf_dir)["documents"]
     toks = docs.select(
@@ -1125,7 +1113,7 @@ def corpus_domain_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # al. 2021, "Deduplicating Training Data Makes Language Models
 # Better", public paper). Pure composition of two memoized artifacts:
 # the MinHash-LSH near-dup pair table (dedup_minhash_lsh) and the
-# deterministic md5 split coins (split_assign, coverage2.py) — pairs
+# deterministic md5 split coins (split_assign, coverage.py) — pairs
 # whose endpoints land in different splits ARE the leakage, reported
 # pair-level with both split labels so the worst offenders (highest
 # jaccard) sort to the top of any triage.
@@ -1141,8 +1129,8 @@ def corpus_domain_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _split_bucket_cte() -> str:
     """(doc_id, split) CTE — same md5-nibble coins as split_assign's
-    oracle (coverage2._split_oracle), shared so the two can't drift."""
-    from erkg_tutorials_spark.plans.coverage2 import _NIB
+    oracle (coverage._split_oracle), shared so the two can't drift."""
+    from erkg_tutorials_spark.plans.coverage import _NIB
 
     expr = (
         f"((({_NIB.format(p=13)}) * 16 + ({_NIB.format(p=14)})) * 16"

@@ -2,25 +2,15 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
-from erkg_tutorials_spark.similarity.knn import cosine_knn_bruteforce
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from erkg_tutorials_spark.graph.ckpt import CheckpointChain
+from erkg_tutorials_spark.plans.registry import register
+from erkg_tutorials_spark.similarity.knn import _as_double, _dot, cosine_knn_bruteforce
 
 N_QUERY_VECS = 10
 TOP_K = 5
@@ -131,8 +121,6 @@ def kmeans_cells_for(spark: SparkSession, sf_dir: str) -> int:
     """max(KMEANS_K, ceil(sqrt(|embeddings|))) — the IVF cell count,
     memoized per (application, sf_dir); the count is parquet-metadata
     cheap."""
-    import math
-
     from erkg_tutorials_spark.plans.memo import memoized_scalar
 
     return memoized_scalar(
@@ -474,8 +462,6 @@ PQ_RERANK_SQL = (
 def pq_rerank_for(spark: SparkSession, sf_dir: str) -> int:
     """max(PQ_RERANK, ceil(sqrt(|embeddings|))) — memoized per
     (application, sf_dir); the count is parquet-metadata cheap."""
-    import math
-
     from erkg_tutorials_spark.plans.memo import memoized_scalar
 
     return memoized_scalar(
@@ -698,7 +684,6 @@ _CURATION_ORACLE = _kmeans_cent_cte() + f"""
 @register("curation_cluster_sample", _CURATION_ORACLE)
 def curation_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced corpus subsample: nearest-centroid assignment, per-cluster hash-rank quota, per-cluster kept-set manifest."""
-    from pyspark.sql import Window
     from erkg_tutorials_spark.similarity.ivf import ivf_cells
 
     emb = load_tables(spark, sf_dir)["embeddings"]
@@ -727,4 +712,415 @@ def curation_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"bit_xor(CASE WHEN rk <= {CURATION_QUOTA} THEN skey ELSE 0 END)")
         .cast("long")
         .alias("kept_fp"),
+    )
+
+
+# ===========================================================================
+# Vector surface: greedy k-center coreset selection and
+# retrieval-quality evaluation (nDCG@k of the IVF tier against the
+# brute-force ground truth).
+#
+# k-center greedy (farthest-point traversal) is the classic coverage
+# sampler for data curation — pick the point farthest from everything
+# already selected, k times — giving a 2-approximation of the optimal
+# k-center cover; the curation complement to the density-balanced
+# ``curation_cluster_sample`` and redundancy-removing ``dedup_semantic``.
+# nDCG closes the evaluation loop the ANN recall study opened
+# (SCALING.md "ANN recall@10"): recall counts the overlap, nDCG weights
+# it by rank, which is the number a retrieval stack actually tunes on.
+# Reference analogue: the tutorials' LanceDB ANN index
+# (reference dagster_icij/assets.py:126-128) trades exactly this
+# quality for speed, unquantified.
+# ===========================================================================
+
+
+# ---------------------------------------------------------------------------
+# Greedy k-center coreset. Deterministic: seed = vec_id 0, then argmax
+# of the running min-cosine-distance with vec_id as tiebreak; distances
+# quantized like every other vector query (cosine rounded to 6dp before
+# the comparison) so both engines rank identically.
+#
+# Scale: each of the K-1 steps is one broadcast of a SINGLE vector +
+# one map-side fold over the corpus + a top-1 (TakeOrderedAndProject)
+# — no |corpus|×|corpus| pair ever materializes, and the evolving
+# min-distance column rides a CheckpointChain (the state references
+# itself through the argmax pick, the p∘p shape ckpt.py's sever guard
+# keeps flat).
+# ---------------------------------------------------------------------------
+KCENTER_K = 8
+
+
+def _kcenter_oracle() -> str:
+    dist = (
+        "1 - ROUND(list_dot_product({a}.emb, {b}.emb)"
+        " / ({a}.vn * {b}.vn), 6)"
+    )
+    parts = [
+        """
+    WITH v AS MATERIALIZED (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
+             sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+                                   CAST(embedding AS DOUBLE[]))) AS vn
+      FROM embeddings
+    ),
+    d0 AS MATERIALIZED (
+      SELECT v.vec_id, {d} AS dmin
+      FROM v CROSS JOIN (SELECT emb, vn FROM v WHERE vec_id = 0) s
+      WHERE v.vec_id <> 0
+    )""".format(d=dist.format(a="v", b="s"))
+    ]
+    for i in range(1, KCENTER_K):
+        parts.append(f"""
+    c{i} AS MATERIALIZED (
+      SELECT vec_id, dmin FROM d{i - 1} ORDER BY dmin DESC, vec_id LIMIT 1
+    ),
+    d{i} AS MATERIALIZED (
+      SELECT d.vec_id,
+             LEAST(d.dmin, {dist.format(a="vv", b="cv")}) AS dmin
+      FROM d{i - 1} d
+      JOIN v vv ON vv.vec_id = d.vec_id
+      CROSS JOIN (SELECT v2.emb, v2.vn
+                  FROM c{i} JOIN v v2 ON v2.vec_id = c{i}.vec_id) cv
+      WHERE d.vec_id <> (SELECT vec_id FROM c{i})
+    )""")
+    finals = "\n    UNION ALL\n".join(
+        f"    SELECT CAST({i} AS INTEGER) AS sel_rank, vec_id,"
+        f" dmin AS radius FROM c{i}"
+        for i in range(1, KCENTER_K)
+    )
+    return (
+        ",".join(parts)
+        + """
+    SELECT CAST(0 AS INTEGER) AS sel_rank, CAST(0 AS BIGINT) AS vec_id,
+           CAST(1.0 AS DOUBLE) AS radius
+    UNION ALL
+"""
+        + finals
+    )
+
+
+@register("coreset_kcenter", _kcenter_oracle())
+def coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy k-center coreset over the embeddings (farthest-point traversal from vec 0, k=8): selection rank, picked vector, and its covering radius at selection."""
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    v = emb.select(
+        "vec_id", _as_double("embedding").alias("emb")
+    ).withColumn("vn", F.sqrt(_dot("emb", "emb")))
+    seed = v.where(F.col("vec_id") == 0).select(
+        F.col("emb").alias("cemb"), F.col("vn").alias("cvn")
+    )
+
+    def dist_to(center_1row: DataFrame, base: DataFrame) -> DataFrame:
+        return (
+            base.crossJoin(F.broadcast(center_1row))
+            .withColumn(
+                "dist",
+                F.lit(1.0)
+                - F.round(
+                    _dot("emb", "cemb") / (F.col("vn") * F.col("cvn")), 6
+                ),
+            )
+            .drop("cemb", "cvn")
+        )
+
+    chain = CheckpointChain()
+    d = chain(
+        dist_to(seed, v.where(F.col("vec_id") != 0)).withColumnRenamed(
+            "dist", "dmin"
+        )
+    )
+    out = None
+    for i in range(1, KCENTER_K):
+        pick = (
+            d.orderBy(F.desc("dmin"), F.asc("vec_id"))
+            .limit(1)
+            .select("vec_id", "dmin")
+            .localCheckpoint(eager=True)
+        )
+        row = pick.withColumn("sel_rank", F.lit(i)).select(
+            "sel_rank", "vec_id", F.col("dmin").alias("radius")
+        )
+        out = row if out is None else out.unionByName(row)
+        center = (
+            v.join(F.broadcast(pick.select("vec_id")), "vec_id")
+            .select(F.col("emb").alias("cemb"), F.col("vn").alias("cvn"))
+        )
+        d = chain(
+            dist_to(
+                center,
+                d.join(
+                    F.broadcast(pick.select("vec_id")), "vec_id", "left_anti"
+                ).select("vec_id", "emb", "vn", "dmin"),
+            )
+            .select(
+                "vec_id",
+                "emb",
+                "vn",
+                F.least("dmin", "dist").alias("dmin"),
+            )
+        )
+    # seed row: rank 0, vec 0, covering radius 1.0 by convention
+    seed_row = (
+        d.sparkSession.range(1)
+        .select(
+            F.lit(0).alias("sel_rank"),
+            F.lit(0).cast("long").alias("vec_id"),
+            F.lit(1.0).alias("radius"),
+        )
+    )
+    assert out is not None
+    return seed_row.unionByName(out)
+
+
+# ---------------------------------------------------------------------------
+# nDCG@10 of the IVF tier vs the brute-force ground truth. Graded
+# relevance: the brute-force rank-r neighbor scores 11-r (r ≤ 10).
+# Per-term DCG contributions are quantized to integer micro-units
+# BEFORE summing, so the aggregation is order-independent and the
+# oracle hash-matches exactly (the repo's exact-math discipline applied
+# to a float formula).
+# ---------------------------------------------------------------------------
+NDCG_K = 10
+_IDCG_MICRO = sum(
+    round((NDCG_K + 1 - i) / math.log2(i + 1) * 1_000_000)
+    for i in range(1, NDCG_K + 1)
+)
+
+
+def _ndcg_oracle() -> str:
+    return (
+        _kmeans_cent_cte()
+        + f"""
+    assign_scored AS (
+      SELECT v.vec_id, c.cent_id,
+             ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
+               ROUND(list_dot_product(v.emb, c.cvec)
+                 / (v.vn * sqrt(list_dot_product(c.cvec, c.cvec))), 6)
+               DESC, c.cent_id) AS rn
+      FROM v CROSS JOIN cent c
+    ),
+    assigned AS (SELECT vec_id, cent_id AS cell FROM assign_scored WHERE rn = 1),
+    q AS (SELECT vec_id AS query_id, emb AS qv, vn AS qn FROM v
+          WHERE vec_id < {IVF_QUERIES}),
+    probe_scored AS (
+      SELECT q.query_id, c.cent_id,
+             ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
+               ROUND(list_dot_product(q.qv, c.cvec)
+                 / (q.qn * sqrt(list_dot_product(c.cvec, c.cvec))), 6)
+               DESC, c.cent_id) AS rn
+      FROM q CROSS JOIN cent c
+    ),
+    probes AS (SELECT query_id, cent_id AS cell FROM probe_scored
+               WHERE rn <= {NPROBE_SQL}),
+    sys_scored AS (
+      SELECT p.query_id, a.vec_id AS neighbor_id,
+             ROUND(list_dot_product(vq.emb, vn_.emb)
+               / (vq.vn * vn_.vn), 6) AS cosine
+      FROM probes p JOIN assigned a ON a.cell = p.cell
+      JOIN v vq ON vq.vec_id = p.query_id
+      JOIN v vn_ ON vn_.vec_id = a.vec_id
+      WHERE a.vec_id <> p.query_id
+    ),
+    sys AS (
+      SELECT query_id, neighbor_id, rank FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                    ORDER BY cosine DESC, neighbor_id) AS rank
+        FROM sys_scored
+      ) WHERE rank <= {NDCG_K}
+    ),
+    bf_scored AS (
+      SELECT q.query_id, v2.vec_id AS neighbor_id,
+             ROUND(list_dot_product(v2.emb, q.qv)
+               / (v2.vn * q.qn), 6) AS cosine
+      FROM v v2 CROSS JOIN q
+      WHERE v2.vec_id <> q.query_id
+    ),
+    gt AS (
+      SELECT query_id, neighbor_id, gt_rank FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                    ORDER BY cosine DESC, neighbor_id) AS gt_rank
+        FROM bf_scored
+      ) WHERE gt_rank <= {NDCG_K}
+    ),
+    scoredq AS (
+      SELECT s.query_id,
+             CAST(SUM(CASE WHEN g.gt_rank IS NOT NULL
+                           THEN {NDCG_K + 1} - g.gt_rank ELSE 0 END)
+                  AS BIGINT) AS rel_sum,
+             CAST(SUM(CAST(ROUND(
+               (CASE WHEN g.gt_rank IS NOT NULL
+                     THEN CAST({NDCG_K + 1} - g.gt_rank AS DOUBLE)
+                     ELSE 0.0 END)
+               / log2(s.rank + 1) * 1000000, 0) AS BIGINT))
+                  AS BIGINT) AS dcg_micro
+      FROM sys s
+      LEFT JOIN gt g ON g.query_id = s.query_id
+                    AND g.neighbor_id = s.neighbor_id
+      GROUP BY s.query_id
+    )
+    SELECT query_id, rel_sum,
+           dcg_micro / 1000000.0 AS dcg,
+           ROUND(dcg_micro * 1.0 / {_IDCG_MICRO}, 6) AS ndcg
+    FROM scoredq
+    """
+    )
+
+
+@register("retrieval_ndcg_eval", _ndcg_oracle())
+def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """nDCG@10 of IVF retrieval vs brute-force ground truth per query (graded relevance 11-rank, micro-unit-exact DCG sums)."""
+    from erkg_tutorials_spark.similarity.ivf import cosine_knn_ivf
+
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    queries = emb.where(F.col("vec_id") < IVF_QUERIES)
+    cent = ivf_centroids_cached(spark, sf_dir).select(
+        F.col("cent_id").alias("vec_id"), F.col("cvec").alias("embedding")
+    )
+    sys = cosine_knn_ivf(
+        corpus=emb,
+        queries=queries,
+        centroids=cent,
+        nprobe=ivf_nprobe_for(spark, sf_dir),
+        k=NDCG_K,
+    ).select("query_id", "neighbor_id", "rank")
+    gt = cosine_knn_bruteforce(
+        corpus=emb, queries=queries, k=NDCG_K
+    ).select(
+        "query_id", "neighbor_id", F.col("rank").alias("gt_rank")
+    )
+    rel = F.when(
+        F.col("gt_rank").isNotNull(),
+        F.lit(NDCG_K + 1) - F.col("gt_rank"),
+    ).otherwise(F.lit(0))
+    joined = sys.join(gt, ["query_id", "neighbor_id"], "left").select(
+        "query_id",
+        rel.alias("rel"),
+        F.round(
+            rel.cast("double") / F.log2(F.col("rank") + 1) * 1_000_000, 0
+        )
+        .cast("long")
+        .alias("term_micro"),
+    )
+    return joined.groupBy("query_id").agg(
+        F.sum("rel").cast("long").alias("rel_sum"),
+        (F.sum("term_micro") / F.lit(1_000_000.0)).alias("dcg"),
+        F.round(
+            F.sum("term_micro") * 1.0 / F.lit(_IDCG_MICRO), 6
+        ).alias("ndcg"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Hard-negative mining for contrastive training (the in-batch-
+# negatives upgrade every retrieval/embedding trainer runs — DPR,
+# Karpukhin et al. 2020; sentence-transformers' mine_hard_negatives —
+# public work): for each query vector, the top-k most cosine-similar
+# vectors with a DIFFERENT label are its hard negatives, reported
+# next to the query's best same-label (positive) cosine so the
+# pos−neg margin is visible per pair. Negatives with a positive or
+# tiny margin are the training signal; large margins are easy
+# negatives a curriculum can drop.
+#
+# Scale: identical shape to knn_cosine_bruteforce — broadcast the
+# small query set against the partitioned corpus, fold dot products
+# JVM-side (zip_with + aggregate, in-order so both engines agree),
+# per-query top-k via window over the tiny scored slice. The label
+# filter prunes BEFORE ranking, so negatives-per-query work tracks
+# the corpus scan it already pays. 6dp rounding before ranking keeps
+# ordering engine-stable (similarity/knn.py's device).
+# ---------------------------------------------------------------------------
+HARDNEG_QUERIES = 10
+HARDNEG_K = 5
+
+
+@register(
+    "hardneg_mining",
+    f"""
+    WITH v AS (
+      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
+             sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+                                   CAST(embedding AS DOUBLE[]))) AS vn
+      FROM embeddings
+    ),
+    q AS (
+      SELECT vec_id AS query_id, label AS qlabel, emb AS qv, vn AS qn
+      FROM v WHERE vec_id < {HARDNEG_QUERIES}
+    ),
+    scored AS (
+      SELECT q.query_id, q.qlabel, v.vec_id AS neighbor_id,
+             v.label AS nlabel,
+             ROUND(list_dot_product(v.emb, q.qv) / (v.vn * q.qn), 6)
+               AS cosine
+      FROM v CROSS JOIN q
+      WHERE v.vec_id <> q.query_id
+    ),
+    best_pos AS (
+      SELECT query_id, MAX(cosine) AS best_pos_cosine
+      FROM scored WHERE nlabel = qlabel GROUP BY query_id
+    ),
+    negs AS (
+      SELECT query_id, neighbor_id, nlabel, cosine,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+                                ORDER BY cosine DESC, neighbor_id) AS rank
+      FROM scored WHERE nlabel <> qlabel
+    )
+    SELECT n.query_id, n.neighbor_id,
+           CAST(n.nlabel AS BIGINT) AS neg_label, n.cosine,
+           CAST(n.rank AS BIGINT) AS rank,
+           p.best_pos_cosine,
+           ROUND(p.best_pos_cosine - n.cosine, 6) AS margin
+    FROM negs n JOIN best_pos p USING (query_id)
+    WHERE n.rank <= {HARDNEG_K}
+    """,
+)
+def hardneg_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contrastive hard-negative mining: per query vector, top-k most-similar different-label vectors with the best-positive cosine and pos-neg margin."""
+    t = load_tables(spark, sf_dir)
+    v = (
+        t["embeddings"]
+        .select("vec_id", "label", _as_double("embedding").alias("cv"))
+        .withColumn("cn", F.sqrt(_dot("cv", "cv")))
+    )
+    q = v.where(F.col("vec_id") < HARDNEG_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("qlabel"),
+        F.col("cv").alias("qv"),
+        F.col("cn").alias("qn"),
+    )
+    scored = (
+        v.crossJoin(F.broadcast(q))
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "qlabel",
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("label").alias("nlabel"),
+            F.round(
+                _dot("cv", "qv") / (F.col("cn") * F.col("qn")), 6
+            ).alias("cosine"),
+        )
+    )
+    best_pos = (
+        scored.where(F.col("nlabel") == F.col("qlabel"))
+        .groupBy("query_id")
+        .agg(F.max("cosine").alias("best_pos_cosine"))
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    negs = (
+        scored.where(F.col("nlabel") != F.col("qlabel"))
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= HARDNEG_K)
+    )
+    return negs.join(F.broadcast(best_pos), "query_id").select(
+        "query_id",
+        "neighbor_id",
+        F.col("nlabel").cast("long").alias("neg_label"),
+        "cosine",
+        "rank",
+        "best_pos_cosine",
+        F.round(F.col("best_pos_cosine") - F.col("cosine"), 6).alias(
+            "margin"
+        ),
     )

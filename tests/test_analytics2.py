@@ -1,4 +1,4 @@
-"""Tests for the second analytics tier (plans/analytics2.py):
+"""Tests for the second analytics tier (plans/analytics.py):
 heavy hitters, rolling distinct, transitions, sweep-line peaks,
 skyline, duplicated n-grams, Gram matrix."""
 
@@ -9,7 +9,7 @@ import pytest
 
 from tests.conftest import SF_DIR
 
-from erkg_tutorials_spark.plans.analytics2 import (
+from erkg_tutorials_spark.plans.analytics import (
     HH_K,
     dedup_duplicated_ngrams,
     embedding_gram_matrix,
@@ -255,7 +255,7 @@ class TestGramMatrix:
 
 class TestRfmSegments:
     def test_scores_in_range_and_segment_consistent(self, spark):
-        from erkg_tutorials_spark.plans.analytics2 import rfm_segments
+        from erkg_tutorials_spark.plans.analytics import rfm_segments
 
         rows = rfm_segments(spark, SF_DIR).collect()
         assert rows
@@ -265,14 +265,14 @@ class TestRfmSegments:
 
     def test_monotone_in_metric(self, spark):
         # A strictly higher monetary value can never get a lower m_score.
-        from erkg_tutorials_spark.plans.analytics2 import rfm_segments
+        from erkg_tutorials_spark.plans.analytics import rfm_segments
 
         rows = sorted(rfm_segments(spark, SF_DIR).collect(), key=lambda r: r.monetary)
         for a, b in zip(rows, rows[1:]):
             assert a.m_score <= b.m_score
 
     def test_ties_share_scores(self, spark):
-        from erkg_tutorials_spark.plans.analytics2 import rfm_segments
+        from erkg_tutorials_spark.plans.analytics import rfm_segments
 
         rows = rfm_segments(spark, SF_DIR).collect()
         by_freq = {}
@@ -284,7 +284,7 @@ class TestRfmSegments:
 
 class TestMadOutliers:
     def test_matches_pandas_median(self, spark):
-        from erkg_tutorials_spark.plans.analytics2 import mad_outliers_events
+        from erkg_tutorials_spark.plans.analytics import mad_outliers_events
 
         rows = {r.event_type: r for r in mad_outliers_events(spark, SF_DIR).collect()}
         pdf = (
@@ -321,7 +321,7 @@ class TestDocPerplexity:
 
 class TestWeightedSample:
     def test_sample_size_and_weight_bias(self, spark):
-        from erkg_tutorials_spark.plans.analytics2 import (
+        from erkg_tutorials_spark.plans.analytics import (
             WSAMPLE_K,
             sample_weighted_orders,
         )
@@ -345,7 +345,7 @@ class TestWeightedSample:
         assert samp_mean > pop_mean
 
     def test_deterministic(self, spark):
-        from erkg_tutorials_spark.plans.analytics2 import sample_weighted_orders
+        from erkg_tutorials_spark.plans.analytics import sample_weighted_orders
 
         a = {(r.priority, r.o_orderkey) for r in sample_weighted_orders(spark, SF_DIR).collect()}
         b = {(r.priority, r.o_orderkey) for r in sample_weighted_orders(spark, SF_DIR).collect()}
@@ -357,11 +357,11 @@ class TestHeavyHittersPartitionInvariance:
         # The MG pass sees different per-partition streams at every
         # parallelism, but the exact second pass makes the final
         # output partitioning-independent.
-        from erkg_tutorials_spark.plans.analytics2 import HH_K
+        from erkg_tutorials_spark.plans.analytics import HH_K
         from pyspark.sql import functions as F
         import pandas as pd
 
-        from erkg_tutorials_spark.plans.analytics2 import misra_gries_candidates
+        from erkg_tutorials_spark.plans.analytics import misra_gries_candidates
 
         e = spark.read.parquet(f"{SF_DIR}/events.parquet").select("user_id")
         results = []

@@ -1,4 +1,4 @@
-"""Tests for the third analytics tier (plans/analytics3.py): exact
+"""Tests for the third analytics tier (plans/analytics.py): exact
 prefix-filter similarity join, Bloom prefilter, winsorization.
 
 The oracle gate already pins output equality; these pin the
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
-from erkg_tutorials_spark.plans.analytics3 import (
+from erkg_tutorials_spark.plans.analytics import (
     BLOOM_K,
     BLOOM_M_BITS,
     SIMJOIN_TAU_DEN,
@@ -90,7 +90,7 @@ class TestSimjoinPrefixFilter:
 class TestSimjoinEditDistance:
     def test_matches_bruteforce(self, spark):
         from erkg_tutorials_spark.catalog import load_tables
-        from erkg_tutorials_spark.plans.analytics3 import (
+        from erkg_tutorials_spark.plans.analytics import (
             EDIT_DMAX,
             simjoin_edit_distance,
         )
@@ -208,7 +208,7 @@ class TestAudienceOverlapBitmap:
     def test_matches_python_sets(self, spark):
         """Packed-word bitmap intersection vs plain Python set math."""
         from erkg_tutorials_spark.catalog import load_tables
-        from erkg_tutorials_spark.plans.analytics3 import audience_overlap_bitmap
+        from erkg_tutorials_spark.plans.analytics import audience_overlap_bitmap
 
         got = {
             (r.type_a, r.type_b): (r.n_a, r.n_b, r.n_common)
@@ -351,7 +351,7 @@ class TestDedupIncremental:
     def test_matches_bruteforce_cross_pairs(self, spark):
         from erkg_tutorials_spark.catalog import load_tables
         from erkg_tutorials_spark.dedup.minhash import shingles
-        from erkg_tutorials_spark.plans.analytics3 import (
+        from erkg_tutorials_spark.plans.analytics import (
             DELTA_MOD,
             SIMJOIN_TAU_DEN,
             SIMJOIN_TAU_NUM,
@@ -384,7 +384,7 @@ class TestDedupIncremental:
 class TestSkewReport:
     def test_matches_pandas(self, spark):
         from erkg_tutorials_spark.catalog import load_tables
-        from erkg_tutorials_spark.plans.analytics3 import (
+        from erkg_tutorials_spark.plans.analytics import (
             SKEW_TOPK,
             skew_report_lineitem,
         )

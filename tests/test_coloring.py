@@ -1,5 +1,5 @@
 """Semantic invariants for the Jones-Plassmann greedy coloring
-(plans/graphq2.py::g_greedy_coloring) — the oracle gate proves
+(plans/graphq.py::g_greedy_coloring) — the oracle gate proves
 Spark==DuckDB on the same fixed-round unrolling; these tests
 prove the unrolling computes a REAL coloring at test scale: proper
 (no edge monochromatic), total (every vertex colored within the fixed
@@ -32,7 +32,7 @@ def graph(spark):
 
 @pytest.fixture(scope="module")
 def coloring(spark):
-    from erkg_tutorials_spark.plans.graphq2 import g_greedy_coloring
+    from erkg_tutorials_spark.plans.graphq import g_greedy_coloring
 
     return {
         r.id: r.color for r in g_greedy_coloring(spark, SF_DIR).collect()
@@ -57,7 +57,7 @@ class TestGreedyColoring:
         assert bad == []
 
     def test_each_vertex_once(self, spark):
-        from erkg_tutorials_spark.plans.graphq2 import g_greedy_coloring
+        from erkg_tutorials_spark.plans.graphq import g_greedy_coloring
 
         df = g_greedy_coloring(spark, SF_DIR)
         assert df.count() == df.select("id").distinct().count()

@@ -1,4 +1,4 @@
-"""DSIR importance resampling (plans/llmops2.py): docs sharing the
+"""DSIR importance resampling (plans/llmops.py): docs sharing the
 target domain's vocabulary must outrank off-domain docs, and the
 exact-integer scoring replays identically."""
 
@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import os
 
-from erkg_tutorials_spark.plans.llmops2 import QUERIES
+from erkg_tutorials_spark.plans.registry import QUERIES
 
 SF = "/root/testdata/sf0.001"
 

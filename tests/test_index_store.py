@@ -10,7 +10,7 @@ results from the loaded state, without retraining.
 import pytest
 
 from erkg_tutorials_spark.plans import memo
-from erkg_tutorials_spark.plans.vectorq import QUERIES
+from erkg_tutorials_spark.plans.registry import QUERIES
 from erkg_tutorials_spark.similarity.index_store import (
     ARTIFACTS,
     index_params,

@@ -1,4 +1,4 @@
-"""Semantic tests for LLM-ops batch 3 (plans/llmops2.py). Oracle
+"""Semantic tests for LLM-ops batch 3 (plans/llmops.py). Oracle
 parity runs in test_oracle_parity.py; these pin the invariants a hash
 match alone would not explain: packing-offset contiguity, the
 keep-everything tier, mixture determinism, and maximal-run islands
@@ -9,7 +9,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
-from erkg_tutorials_spark.plans.llmops2 import (
+from erkg_tutorials_spark.plans.llmops import (
     MIN_STREAK,
     SEQ_BUDGET,
     data_mixture_sample,
@@ -136,7 +136,7 @@ class TestGapsIslands:
 class TestShardManifest:
     def test_covers_corpus_and_bounded_heads(self, spark):
         from erkg_tutorials_spark.catalog import load_tables
-        from erkg_tutorials_spark.plans.llmops2 import N_SHARDS, shard_manifest
+        from erkg_tutorials_spark.plans.llmops import N_SHARDS, shard_manifest
         from tests.conftest import SF_DIR
 
         rows = shard_manifest(spark, SF_DIR).collect()
@@ -154,7 +154,7 @@ class TestShardManifest:
     def test_layout_is_deterministic(self, spark):
         """Re-running produces the identical manifest — no RNG
         state; the training order is a pure function of doc_id."""
-        from erkg_tutorials_spark.plans.llmops2 import shard_manifest
+        from erkg_tutorials_spark.plans.llmops import shard_manifest
         from tests.conftest import SF_DIR
 
         a = sorted(map(tuple, shard_manifest(spark, SF_DIR).collect()))
@@ -165,7 +165,7 @@ class TestShardManifest:
         """The within-shard order must come from a PARTITIONED
         window — a global Sort with no partitioning would be the
         single-task funnel this layout exists to avoid."""
-        from erkg_tutorials_spark.plans.llmops2 import shard_manifest
+        from erkg_tutorials_spark.plans.llmops import shard_manifest
         from tests.conftest import SF_DIR
 
         plan = (
@@ -186,8 +186,8 @@ class TestE3PretrainShards:
     alone would not explain."""
 
     def test_conserves_stage_outputs(self, spark):
-        from erkg_tutorials_spark.plans.coverage2 import dedup_keep_best
-        from erkg_tutorials_spark.plans.llmops2 import e3_pretrain_shards
+        from erkg_tutorials_spark.plans.coverage import dedup_keep_best
+        from erkg_tutorials_spark.plans.llmops import e3_pretrain_shards
         from erkg_tutorials_spark.text.quality import logistic_quality
 
         manifest = e3_pretrain_shards(spark, SF_DIR).toPandas()
@@ -204,7 +204,7 @@ class TestE3PretrainShards:
         assert manifest["n_tokens"].sum() == survivors["n_tokens"].sum()
 
     def test_shard_ids_in_range(self, spark):
-        from erkg_tutorials_spark.plans.llmops2 import N_SHARDS, e3_pretrain_shards
+        from erkg_tutorials_spark.plans.llmops import N_SHARDS, e3_pretrain_shards
 
         pdf = e3_pretrain_shards(spark, SF_DIR).toPandas()
         assert pdf["shard"].between(0, N_SHARDS - 1).all()
@@ -216,7 +216,7 @@ class TestE3PretrainShards:
         computed without any per-shard ordering)."""
         from functools import reduce
 
-        from erkg_tutorials_spark.plans.llmops2 import N_SHARDS, e3_pretrain_shards
+        from erkg_tutorials_spark.plans.llmops import N_SHARDS, e3_pretrain_shards
         from erkg_tutorials_spark.plans.registry import ORACLES
 
         import duckdb

@@ -1,5 +1,5 @@
 """Semantic invariants for the Borůvka MST forest and Luby MIS
-(plans/graphq2.py) — the oracle gate proves Spark==DuckDB on the same
+(plans/graphq.py) — the oracle gate proves Spark==DuckDB on the same
 fixed-round unrolling; these tests prove the unrolling computes the
 REAL structures at test scale: the forest is acyclic, spanning, and
 weight-optimal against a pure-Python Kruskal; the MIS is independent
@@ -64,7 +64,7 @@ def _kruskal_weight(wedges) -> tuple[int, int]:
 class TestMST:
     @pytest.fixture(scope="class")
     def forest(self, spark):
-        from erkg_tutorials_spark.plans.graphq2 import g_mst_forest
+        from erkg_tutorials_spark.plans.graphq import g_mst_forest
 
         return g_mst_forest(spark, SF_DIR).collect()
 
@@ -96,7 +96,7 @@ class TestMST:
 class TestMIS:
     @pytest.fixture(scope="class")
     def mis(self, spark):
-        from erkg_tutorials_spark.plans.graphq2 import g_mis_luby
+        from erkg_tutorials_spark.plans.graphq import g_mis_luby
 
         return {r.id for r in g_mis_luby(spark, SF_DIR).collect()}
 
@@ -156,7 +156,7 @@ class TestIncrementalPR:
         the same top-20 as a cold 8-iteration run on the full graph —
         that closeness is WHY phase 2 alone suffices per batch."""
         from erkg_tutorials_spark.plans.graphq import g5_pagerank_top20
-        from erkg_tutorials_spark.plans.graphq2 import g_pagerank_incremental
+        from erkg_tutorials_spark.plans.graphq import g_pagerank_incremental
 
         warm = [r.id for r in g_pagerank_incremental(spark, SF_DIR).collect()]
         cold = [r.id for r in g5_pagerank_top20(spark, SF_DIR).collect()]

@@ -161,7 +161,7 @@ class TestCli:
 
         assert main(["list", "q1_"]) == 0
         out = capsys.readouterr().out
-        assert "q1_pricing_summary  [oracle]" in out
+        assert "q1_pricing_summary" in out.splitlines()
         assert main(["oracle", "q1_pricing_summary"]) == 0
         assert "SELECT" in capsys.readouterr().out.upper()
         assert main(["oracle", "nope"]) == 1

@@ -80,7 +80,7 @@ class TestMisraGriesProperty:
         import pandas as pd
         from collections import Counter
 
-        from erkg_tutorials_spark.plans.analytics2 import misra_gries_candidates
+        from erkg_tutorials_spark.plans.analytics import misra_gries_candidates
 
         batches = (
             pd.DataFrame({"x": stream[i : i + batch]})

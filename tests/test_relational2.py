@@ -1,9 +1,9 @@
-"""Semantic tests for the relational-depth tier (plans/relational2.py)."""
+"""Semantic tests for the relational-depth tier (plans/relational.py)."""
 
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
-from erkg_tutorials_spark.plans.relational2 import (
+from erkg_tutorials_spark.plans.relational import (
     merge_upsert_customers,
     q4_exists_late_ship,
     q11_major_suppliers,
@@ -94,7 +94,7 @@ class TestMergeUpsert:
 
 class TestAnalyticFunctions:
     def test_w6_against_bruteforce(self, spark):
-        from erkg_tutorials_spark.plans.relational2 import w6_analytic_functions
+        from erkg_tutorials_spark.plans.relational import w6_analytic_functions
 
         rows = w6_analytic_functions(spark, SF_DIR).collect()
         by_prio = {}

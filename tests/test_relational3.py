@@ -1,4 +1,4 @@
-"""Semantic tests for the TPC-H completion tier (plans/relational3.py).
+"""Semantic tests for the TPC-H completion tier (plans/relational.py).
 
 Oracle parity for every query is already enforced by
 tests/test_oracle_parity.py (and the driver's sf0.01 gate); these
@@ -10,7 +10,7 @@ and plan-quality gates (broadcast dims, no cartesian products).
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.catalog import load_tables
-from erkg_tutorials_spark.plans.relational3 import (
+from erkg_tutorials_spark.plans.relational import (
     q6_forecast_revenue,
     q9_profit_by_nation_year,
     q13_order_count_distribution,
@@ -119,7 +119,7 @@ class TestSetOps:
         """INTERSECT/EXCEPT must compile to semi/anti hash joins with the
         date predicates pushed to the parquet scan — never a distinct
         materialization of the fact followed by wide joins."""
-        from erkg_tutorials_spark.plans.relational3 import setop_repeat_customers
+        from erkg_tutorials_spark.plans.relational import setop_repeat_customers
 
         plan = (
             setop_repeat_customers(spark, SF_DIR)
@@ -134,7 +134,7 @@ class TestSetOps:
     def test_setop_distinct_semantics(self, spark):
         """Result custkeys are unique (INTERSECT/EXCEPT are set ops, not
         multiset), and every one has orders in both years."""
-        from erkg_tutorials_spark.plans.relational3 import setop_repeat_customers
+        from erkg_tutorials_spark.plans.relational import setop_repeat_customers
 
         df = setop_repeat_customers(spark, SF_DIR)
         n = df.count()

@@ -29,7 +29,7 @@ def spark():
 
 
 def test_warmstart_equals_recompute(spark):
-    from erkg_tutorials_spark.plans.graphq2 import (
+    from erkg_tutorials_spark.plans.graphq import (
         g_pagerank_incremental,
         g_pagerank_warmstart_lakehouse,
     )
@@ -54,7 +54,7 @@ def test_rank_table_time_travel(spark, tmp_path):
         read_version,
         write_version,
     )
-    from erkg_tutorials_spark.plans.graphq2 import (
+    from erkg_tutorials_spark.plans.graphq import (
         PR_CUTOFF,
         dated_trade_edges_sym,
     )

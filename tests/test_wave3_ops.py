@@ -22,7 +22,7 @@ class TestSeasonalDecompose:
         """By construction Σ_{days in (type, dow)} resid_scaled = 0
         exactly: the seasonal mean absorbs the detrended mass. An
         exact-integer identity, so == 0, not ≈."""
-        from erkg_tutorials_spark.plans.eventsq2 import (
+        from erkg_tutorials_spark.plans.eventsq import (
             events_seasonal_decompose,
         )
 
@@ -40,7 +40,7 @@ class TestSeasonalDecompose:
     def test_trend_only_on_full_windows(self, spark):
         """trend7_sum is NULL exactly on days without the full ±3-day
         window — no partial-window leakage at series edges."""
-        from erkg_tutorials_spark.plans.eventsq2 import (
+        from erkg_tutorials_spark.plans.eventsq import (
             events_seasonal_decompose,
         )
 
@@ -61,7 +61,7 @@ class TestAutocorrelation:
     def test_matches_pure_python_acf(self, spark):
         """num/den reproduce the textbook scaled ACF on the collected
         daily series (exact integers, so == not ≈)."""
-        from erkg_tutorials_spark.plans.eventsq2 import (
+        from erkg_tutorials_spark.plans.eventsq import (
             events_autocorrelation,
         )
         from erkg_tutorials_spark.catalog import load_tables
@@ -94,7 +94,7 @@ class TestAutocorrelation:
             ), r
 
     def test_lags_one_through_seven(self, spark):
-        from erkg_tutorials_spark.plans.eventsq2 import (
+        from erkg_tutorials_spark.plans.eventsq import (
             ACF_MAX_LAG,
             events_autocorrelation,
         )
@@ -173,7 +173,7 @@ class TestDomainDivergence:
 
 class TestHardNegMining:
     def test_negatives_have_different_labels_and_margins(self, spark):
-        from erkg_tutorials_spark.plans.vectorq2 import (
+        from erkg_tutorials_spark.plans.vectorq import (
             HARDNEG_K,
             hardneg_mining,
         )
@@ -199,7 +199,7 @@ class TestHardNegMining:
 
 class TestDegreeAssortativity:
     def test_matches_pure_python_newman_formula(self, spark):
-        from erkg_tutorials_spark.plans.graphq2 import g_degree_assortativity
+        from erkg_tutorials_spark.plans.graphq import g_degree_assortativity
         from erkg_tutorials_spark.plans.graphq import trade_edges_sym
 
         edges = [
@@ -221,7 +221,7 @@ class TestDegreeAssortativity:
         assert row.den_scaled == float(m * sjj - sj * sj)
 
     def test_bipartite_trade_graph_is_disassortative(self, spark):
-        from erkg_tutorials_spark.plans.graphq2 import g_degree_assortativity
+        from erkg_tutorials_spark.plans.graphq import g_degree_assortativity
 
         row = g_degree_assortativity(spark, SF_DIR).collect()[0]
         assert row.den_scaled > 0
@@ -230,7 +230,7 @@ class TestDegreeAssortativity:
 
 class TestMannKendall:
     def test_matches_pure_python_statistic(self, spark):
-        from erkg_tutorials_spark.plans.graphq2 import events_mann_kendall
+        from erkg_tutorials_spark.plans.graphq import events_mann_kendall
         from erkg_tutorials_spark.catalog import load_tables
         from pyspark.sql import functions as F
 
@@ -295,7 +295,7 @@ class TestMixtureTemperature:
     def test_weights_flatten_toward_uniform_and_budget_consistent(
         self, spark
     ):
-        from erkg_tutorials_spark.plans.llmops2 import (
+        from erkg_tutorials_spark.plans.llmops import (
             MIX_TAU_BUDGET_X,
             mixture_temperature_weights,
         )
@@ -325,7 +325,7 @@ class TestDiameterBoundFrontierBfs:
         from collections import deque
 
         from erkg_tutorials_spark.plans.graphq import trade_edges_sym
-        from erkg_tutorials_spark.plans.graphq2 import g_diameter_bound
+        from erkg_tutorials_spark.plans.graphq import g_diameter_bound
 
         adj: dict = {}
         for r in trade_edges_sym(spark, SF_DIR).collect():
@@ -359,7 +359,7 @@ class TestDiameterBoundFrontierBfs:
 class TestWeightedPagerank:
     def test_matches_pure_python_weighted_iteration(self, spark):
         from erkg_tutorials_spark.plans.graphq import trade_wedges_sym
-        from erkg_tutorials_spark.plans.graphq2 import (
+        from erkg_tutorials_spark.plans.graphq import (
             WPR_ITERS,
             g_pagerank_weighted,
         )
@@ -395,7 +395,7 @@ class TestWeightedPagerank:
 class TestSubstringSpans:
     def test_matches_pure_python_islands(self, spark):
         from erkg_tutorials_spark.catalog import load_tables
-        from erkg_tutorials_spark.plans.analytics2 import (
+        from erkg_tutorials_spark.plans.analytics import (
             _NGRAM_N,
             dedup_substring_spans,
         )
@@ -433,7 +433,7 @@ class TestSubstringSpans:
         assert got == expect
 
     def test_spans_disjoint_and_minimum_width(self, spark):
-        from erkg_tutorials_spark.plans.analytics2 import (
+        from erkg_tutorials_spark.plans.analytics import (
             _NGRAM_N,
             dedup_substring_spans,
         )
@@ -458,7 +458,7 @@ class TestApproxQuantilesHistogram:
         import math
 
         from erkg_tutorials_spark.catalog import load_tables
-        from erkg_tutorials_spark.plans.eventsq2 import (
+        from erkg_tutorials_spark.plans.eventsq import (
             HIST_BINS,
             approx_quantiles_histogram,
         )

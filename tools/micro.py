@@ -41,7 +41,7 @@ def warm(spark, sf_dir: str) -> None:
         trade_edges_fwd,
         trade_graph_invariants,
     )
-    from erkg_tutorials_spark.plans.graphq2 import ensure_prbase
+    from erkg_tutorials_spark.plans.graphq import ensure_prbase
     from erkg_tutorials_spark.plans.textq import minhash_pairs_cached
     from erkg_tutorials_spark.plans.vectorq import (
         ivf_centroids_cached,

@@ -44,7 +44,7 @@ def main() -> None:
         trade_edges_sym,
         trade_graph_invariants,
     )
-    from erkg_tutorials_spark.plans.graphq2 import PR_CUTOFF, PR_BASE_ITERS, PR_DELTA_ITERS, _DatedPre
+    from erkg_tutorials_spark.plans.graphq import PR_CUTOFF, PR_BASE_ITERS, PR_DELTA_ITERS, _DatedPre
 
     for r in range(runs):
         rec: dict = {"run": r, "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32")}
