@@ -17,9 +17,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def char_ngrams(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
-    """Distinct character n-grams of the lowercased, trimmed string
-    (padded with boundary marks so short strings still shingle)."""
+def _grams(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, gram) for every character n-gram of the lowercased, trimmed
+    string (padded with boundary marks so short strings still
+    shingle); a gram repeats as often as it occurs."""
     padded = F.concat(F.lit("^"), F.lower(F.trim(F.col(text_col))), F.lit("$"))
     grams = F.expr(
         f"transform(sequence(1, greatest(length(_padded) - {n} + 1, 1)), i -> substring(_padded, i, {n}))"
@@ -28,8 +29,12 @@ def char_ngrams(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFr
         df.withColumn("_padded", padded)
         .select(F.col(id_col).alias("id"), F.explode(grams).alias("gram"))
         .where(F.length("gram") > 0)
-        .distinct()
     )
+
+
+def char_ngrams(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
+    """Distinct character n-grams per id (see :func:`_grams`)."""
+    return _grams(df, text_col, id_col, n).distinct()
 
 
 def alias_candidates(
@@ -48,61 +53,48 @@ def alias_candidates(
     MinHash over char n-grams, banded LSH join (r = num_hashes/bands
     rows per band — r=2 keeps recall high for the short-string
     regime), then exact Jaccard verification of candidates only.
+
+    Each side is one aggregate per id: its min-hashes plus its gram
+    set, so the Jaccard of a candidate pair is computed from the two
+    sets it carries and each side is read once (no cache, no gram
+    joins). The aggregate dedups grams and alias strings itself.
     """
-    m_grams = char_ngrams(mentions, mention_text, mention_id).cache()
-    a_grams = char_ngrams(
-        aliases.select(F.col(alias_text).alias("_alias")).distinct(),
-        "_alias",
-        "_alias",
-    ).cache()
-
-    def signature(grams: DataFrame) -> DataFrame:
-        aggs = [
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("gram")))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-        return grams.groupBy("id").agg(*aggs)
-
     r = num_hashes // bands
 
-    def banded(sig: DataFrame) -> DataFrame:
-        frames = []
-        for b in range(bands):
-            key = F.concat(*[F.col(f"h{b * r + j}") for j in range(r)])
-            frames.append(sig.select("id", F.lit(b).alias("band"), key.alias("bkey")))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+    def side(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+        sig = (
+            _grams(df, text_col, id_col, n)
+            .groupBy("id")
+            .agg(
+                F.collect_set("gram").alias("grams"),
+                *[
+                    F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("gram")))).alias(f"h{i}")
+                    for i in range(num_hashes)
+                ],
+            )
+        )
+        band_keys = F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.concat(*[F.col(f"h{b * r + j}") for j in range(r)]).alias("bkey"),
+                )
+                for b in range(bands)
+            ]
+        )
+        return sig.select("id", "grams", F.inline(band_keys))
 
-    cand = (
-        banded(signature(m_grams))
-        .withColumnRenamed("id", "mid")
-        .join(banded(signature(a_grams)).withColumnRenamed("id", "aid"), ["band", "bkey"])
-        .select("mid", "aid")
-        .distinct()
-    )
-
-    sizes_m = m_grams.groupBy("id").agg(F.count("*").alias("n_m"))
-    sizes_a = a_grams.groupBy("id").agg(F.count("*").alias("n_a"))
-    m_g = m_grams.select(F.col("id").alias("mid"), "gram")
-    a_g = a_grams.select(F.col("id").alias("aid"), "gram")
-    inter = (
-        cand.join(m_g, "mid")
-        .join(a_g, ["aid", "gram"])
-        .groupBy("mid", "aid")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    m = side(mentions, mention_text, mention_id).alias("m")
+    a = side(aliases, alias_text, alias_text).alias("a")
+    n_inter = F.size(F.array_intersect("m.grams", "a.grams"))
+    jaccard = n_inter / (F.size("m.grams") + F.size("a.grams") - n_inter)
     return (
-        inter.join(sizes_m.withColumnRenamed("id", "mid"), "mid")
-        .join(sizes_a.withColumnRenamed("id", "aid"), "aid")
-        .withColumn(
-            "jaccard", F.col("n_inter") / (F.col("n_m") + F.col("n_a") - F.col("n_inter"))
+        m.join(a, ["band", "bkey"])
+        .select(
+            F.col("m.id").alias(mention_id),
+            F.col("a.id").alias(alias_text),
+            jaccard.alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
-        .select(
-            F.col("mid").alias(mention_id),
-            F.col("aid").alias(alias_text),
-            "jaccard",
-        )
+        .distinct()
     )

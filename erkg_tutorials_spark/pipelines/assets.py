@@ -32,11 +32,19 @@ from erkg_tutorials_spark.pipelines.senzing_pipeline import (
     generate_aliases,
     generate_entities,
 )
+from erkg_tutorials_spark.schemas import (
+    ALIAS_RECORDS_SCHEMA,
+    ALIAS_SCHEMA,
+    ENTITY_DATA_SCHEMA,
+    FEATURES_SCHEMA,
+    SUSPECT_IDS_SCHEMA,
+)
 from erkg_tutorials_spark.sources.senzing import (
     alias_records,
     entity_features,
     graph_tables,
     read_senzing_report,
+    related_pairs,
 )
 from erkg_tutorials_spark.sources.tabular import (
     load_countries,
@@ -45,14 +53,15 @@ from erkg_tutorials_spark.sources.tabular import (
     write_jsonl,
 )
 
-# topological order; each entry: (name, format)
-ASSETS = (
-    ("suspect_ids", "parquet"),
-    ("features", "parquet"),
-    ("alias_records", "parquet"),
-    ("entities", "jsonl"),
-    ("aliases", "jsonl"),
-)
+# topological order; name -> (format, schema). Every read-back uses the
+# declared schema, so no read runs a schema-inference job.
+ASSETS = {
+    "suspect_ids": ("parquet", SUSPECT_IDS_SCHEMA),
+    "features": ("parquet", FEATURES_SCHEMA),
+    "alias_records": ("parquet", ALIAS_RECORDS_SCHEMA),
+    "entities": ("jsonl", ENTITY_DATA_SCHEMA),
+    "aliases": ("jsonl", ALIAS_SCHEMA),
+}
 
 
 def _committed(spark: SparkSession, path: str) -> bool:
@@ -87,12 +96,11 @@ def materialize_senzing_assets(
     artifacts are never recomputed; the report is scanned only if some
     report-derived asset is missing.
     """
-    if upto is not None and upto not in dict(ASSETS):
+    if upto is not None and upto not in ASSETS:
         raise ValueError(
-            f"upto={upto!r} is not an asset; expected one of "
-            f"{[n for n, _ in ASSETS]}"
+            f"upto={upto!r} is not an asset; expected one of {list(ASSETS)}"
         )
-    paths = {name: os.path.join(out_dir, name) for name, _ in ASSETS}
+    paths = {name: os.path.join(out_dir, name) for name in ASSETS}
     log: dict[str, str] = {}
 
     # the raw report scan is shared by the three report-derived assets
@@ -105,11 +113,11 @@ def materialize_senzing_assets(
         return raw_holder[0]
 
     def ids() -> DataFrame:
-        return spark.read.parquet(paths["suspect_ids"])
+        return load_asset(spark, out_dir, "suspect_ids")
 
     builders = {
         "suspect_ids": lambda: filter_suspicious(
-            load_text_lines(spark, suspicious_path), *graph_tables(raw())[:2]
+            load_text_lines(spark, suspicious_path), graph_tables(raw())[0], related_pairs(raw())
         ),
         "features": lambda: entity_features(raw()).join(
             ids(), "entity_id", "left_semi"
@@ -120,15 +128,13 @@ def materialize_senzing_assets(
             )
         )(alias_records(raw())),
         "entities": lambda: generate_entities(
-            spark.read.parquet(paths["features"]),
+            load_asset(spark, out_dir, "features"),
             load_countries(spark, countries_path),
         ),
-        "aliases": lambda: generate_aliases(
-            spark.read.parquet(paths["alias_records"])
-        ),
+        "aliases": lambda: generate_aliases(load_asset(spark, out_dir, "alias_records")),
     }
 
-    for name, fmt in ASSETS:
+    for name, (fmt, _) in ASSETS.items():
         path = paths[name]
         if _committed(spark, path):
             log[name] = "cached"
@@ -147,8 +153,8 @@ def materialize_senzing_assets(
 
 
 def load_asset(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
-    fmt = dict(ASSETS)[name]
+    fmt, schema = ASSETS[name]
     path = os.path.join(out_dir, name)
     if fmt == "parquet":
-        return spark.read.parquet(path)
-    return read_jsonl(spark, path)
+        return spark.read.schema(schema).parquet(path)
+    return read_jsonl(spark, path, schema)

@@ -21,6 +21,7 @@ from erkg_tutorials_spark.sources.senzing import (
     entity_features,
     graph_tables,
     read_senzing_report,
+    related_pairs,
 )
 from erkg_tutorials_spark.sources.tabular import load_countries, load_text_lines, write_jsonl
 
@@ -116,8 +117,10 @@ def filter_suspicious(
     (reference filter_senzing, senzing_pipeline.py:373-397).
 
     Exact match is deliberate ("high precision + low recall", comment
-    :381-383); recall is recovered by the 2-hop expansion. Returns one
-    ``entity_id`` (string) column — ids stringified as at :397.
+    :381-383); recall is recovered by the 2-hop expansion. ``edges``
+    needs only ``(src, dst)``, duplicates allowed (``related_pairs``):
+    each hop takes ``distinct``. Returns one ``entity_id`` (string)
+    column — ids stringified as at :397.
     """
     seeds = vertices.join(
         F.broadcast(suspicions), vertices["name"] == suspicions["value"]
@@ -140,8 +143,7 @@ def run_senzing_pipeline(
     countries = load_countries(spark, countries_path)
     suspicions = load_text_lines(spark, suspicious_path)
 
-    vertices, edges, _records = graph_tables(raw)
-    ids = filter_suspicious(suspicions, vertices, edges)
+    ids = filter_suspicious(suspicions, graph_tables(raw)[0], related_pairs(raw))
 
     feats = entity_features(raw)
     # F4: id-set semi-filter on entities (main() :414)

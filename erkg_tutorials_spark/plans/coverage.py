@@ -784,7 +784,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   (spaCy sentencizer, ``scraper.py:51``; pure-SQL tier per SURVEY §2.11)
 # - C10 — ordered newline-join of fragments per group
 #   (``scraper.py:68-74`` joins page fragments with ``"\\n"``)
-# - V1 — the hashing-embedder pandas_udf itself, oracle-checked in
+# - V1 — the hashing embedder itself, oracle-checked in
 #   raw-count mode (md5(token) first-8-bytes % dim bucketing is
 #   replayable in SQL; dim=32 makes the modulus the low 5 bits of the
 #   last two hex nibbles)
@@ -1035,10 +1035,10 @@ def c10_event_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# V1 — the hashing-embedder pandas_udf, oracle-checked. Raw-count mode
-# (no L2 normalize) keeps every value an exact small integer in
-# float32, so Spark's Arrow-batched UDF output and DuckDB's SQL replay
-# compare exactly. Bucket = int(md5(token)[:8 bytes], big-endian) % 32
+# V1 — the hashing embedder (a JVM expression), oracle-checked.
+# Raw-count mode (no L2 normalize) keeps every value an exact small
+# integer in float32, so Spark's output and DuckDB's SQL replay compare
+# exactly. Bucket = int(md5(token)[:8 bytes], big-endian) % 32
 # — with dim=32 only the low 5 bits survive, i.e. the last two hex
 # nibbles of the first 8 digest bytes: (nib14*16 + nib15) % 32.
 # ---------------------------------------------------------------------------
@@ -1047,7 +1047,7 @@ _V1_DIM = 32
 @register(
     "v1_embed_hash",
     # whitespace runs are collapsed on BOTH sides so the oracle's
-    # single-space string_split and the UDF's Python str.split() see
+    # single-space string_split and the embedder's str.split() rule see
     # identical tokens even if text ever carries tabs/newlines
     f"""
     WITH toks AS (
@@ -1066,7 +1066,7 @@ _V1_DIM = 32
     """,
 )
 def v1_embed_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-tier text embedding via an Arrow pandas_udf, summarized per doc."""
+    """Deterministic hash-tier text embedding as a JVM expression, summarized per doc."""
     from erkg_tutorials_spark.linking.embed import hashing_embedder
 
     t = load_tables(spark, sf_dir)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
+    IntegerType,
     LongType,
     MapType,
     StringType,
@@ -92,4 +93,32 @@ ALIAS_SCHEMA = StructType(
         StructField("entities", ArrayType(StringType())),
         StructField("probabilities", ArrayType(DoubleType())),
     ]
+)
+
+# Parquet intermediates of the E1 asset DAG (pipelines/assets.py); a
+# read with a declared schema runs no footer-inference job.
+SUSPECT_IDS_SCHEMA = StructType([StructField("entity_id", StringType())])
+
+FEATURES_SCHEMA = StructType(
+    [
+        StructField("entity_id", StringType()),
+        StructField("features", MapType(StringType(), StringType())),
+        StructField("_row_ord", LongType()),
+    ]
+)
+
+ALIAS_RECORDS_SCHEMA = StructType(
+    [
+        StructField("alias", StringType()),
+        StructField("entity", LongType()),
+        StructField("type", StringType()),
+        StructField("_row_ord", LongType()),
+        StructField("branch", IntegerType()),
+        StructField("pos", IntegerType()),
+    ]
+)
+
+# country TSV (reference get_country, senzing_pipeline.py:21-31)
+COUNTRY_SCHEMA = StructType(
+    [StructField("code", StringType()), StructField("name", StringType())]
 )

@@ -83,7 +83,7 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
-        # Arrow for pandas_udf / mapInPandas exchange (V1 embeddings, N-ops).
+        # Arrow for pandas_udf / mapInPandas exchange (injected encoders, N-ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 128 MiB scan splits. NOTE: the testdata tables are single-row-
         # group parquet files, so byte-range splitting cannot parallelize

@@ -3,6 +3,7 @@ from erkg_tutorials_spark.sources.senzing import (
     entity_features,
     alias_records,
     graph_tables,
+    related_pairs,
 )
 from erkg_tutorials_spark.sources.tabular import (
     load_countries,

@@ -7,6 +7,7 @@ read once (cache at the pipeline level) and derive:
 - :func:`entity_features`  (S1, load_entities :54-80)
 - :func:`alias_records`    (S2, load_aliases :218-269)
 - :func:`graph_tables`     (S3/G1, extract_senzing_results :329-370)
+- :func:`related_pairs`    (the raw (src, dst) relation behind its edges)
 
 Order parity: several reference outputs depend on *file order* (alias
 Counter insertion order, first-non-empty entity name). We carry an
@@ -104,6 +105,17 @@ def alias_records(raw: DataFrame, include_possibly_related: bool = True) -> Data
         )
     )
     return from_records.unionByName(from_related)
+
+
+def related_pairs(raw: DataFrame) -> DataFrame:
+    """(src, dst) for every RELATED_ENTITIES element, duplicates kept.
+    The pairs of :func:`graph_tables`' edges without its last-wins
+    window: a reachability walk that dedups each hop (``k_hop``) needs
+    nothing more."""
+    return raw.select(
+        F.col("RESOLVED_ENTITY.ENTITY_ID").alias("src"),
+        F.explode("RELATED_ENTITIES.ENTITY_ID").alias("dst"),
+    )
 
 
 def graph_tables(raw: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:

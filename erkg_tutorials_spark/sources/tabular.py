@@ -13,16 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from erkg_tutorials_spark.schemas import COUNTRY_SCHEMA
+
 
 def load_countries(spark: SparkSession, path: str) -> DataFrame:
     """S4: country TSV (header row) → (code, name). Tiny dim table —
-    always broadcast at the join site (J1)."""
-    return (
-        spark.read.option("sep", "\t")
-        .option("header", True)
-        .csv(path)
-        .toDF("code", "name")
-    )
+    always broadcast at the join site (J1). The declared schema spares
+    the header-inference job."""
+    return spark.read.option("sep", "\t").option("header", True).schema(COUNTRY_SCHEMA).csv(path)
 
 
 def load_text_lines(spark: SparkSession, path: str) -> DataFrame:

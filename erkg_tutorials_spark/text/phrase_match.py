@@ -39,12 +39,10 @@ def _ngram_matches(docs: DataFrame, patterns: DataFrame, text_col: str, id_col: 
     generated in a single nested higher-order-function projection
     (``flatten(transform(...))``) instead of one unioned scan per
     length — the explosion stays inside one whole-stage-codegen span
-    and the source is read once.
+    and the source is read once. The max pattern length joins in as a
+    broadcast one-row aggregate, so building the plan runs no job.
     """
-    max_len = patterns.select(
-        F.max(F.size(F.split(F.col("pattern"), " "))).alias("m")
-    ).collect()[0]["m"]
-    n = int(max_len or 1)
+    max_len = patterns.agg(F.max(F.size(F.split(F.col("pattern"), " "))).alias("_n"))
     # single-row-group parquet arrives as one partition; spread the
     # CPU-heavy gram explosion across cores (same pattern as
     # dedup/minhash.py — the tiny doc-id shuffle is far cheaper than a
@@ -54,13 +52,13 @@ def _ngram_matches(docs: DataFrame, patterns: DataFrame, text_col: str, id_col: 
         docs.sparkSession.sparkContext.defaultParallelism, id_col
     ).select(
         F.col(id_col).alias("doc_id"), F.split(F.lower(F.col(text_col)), " ").alias("w")
-    )
+    ).crossJoin(F.broadcast(max_len))
     grams = toks.select(
         "doc_id",
         F.explode(
             F.expr(
                 "flatten(transform(sequence(1, least(size(w), "
-                f"{n})), n -> transform(sequence(1, size(w) - n + 1), "
+                "coalesce(_n, 1))), n -> transform(sequence(1, size(w) - n + 1), "
                 "i -> struct(i as start, n as len, array_join(slice(w, i, n), ' ') as gram))))"
             )
         ).alias("g"),

@@ -9,12 +9,19 @@ a nonexistent report path, which would throw on any re-scan."""
 import os
 
 import pytest
+from pyspark.sql import Row
 
 from erkg_tutorials_spark.pipelines.assets import (
     load_asset,
     materialize_senzing_assets,
 )
+from erkg_tutorials_spark.pipelines.entity_linking import (
+    extract_mentions,
+    link_entities,
+    with_self_aliases,
+)
 from erkg_tutorials_spark.pipelines.senzing_pipeline import run_senzing_pipeline
+from erkg_tutorials_spark.sources.tabular import load_countries
 
 from tests.senzing_fixture import write_fixture
 
@@ -97,3 +104,28 @@ class TestKillAndResume:
             upto="suspect_ids",
         )
         assert log == {"suspect_ids": "built"}
+
+
+class TestReadSide:
+    def test_e3_construction_runs_no_job(self, spark, fixture, tmp_path):
+        """Building the E3 plan over the read-back assets runs no Spark
+        job: every read has a declared schema and nothing is collected
+        eagerly. Jobs run only when the caller asks for rows."""
+        out = str(tmp_path / "assets")
+        materialize_senzing_assets(
+            spark, fixture["report"], fixture["suspicious"], fixture["countries"], out
+        )
+        docs = spark.createDataFrame([Row(doc_id=1, text="acme holdings filed in panama")])
+        sc = spark.sparkContext
+        group = "e3-construction"
+        sc.setJobGroup(group, "build the E3 read side")
+        try:
+            entities = load_asset(spark, out, "entities")
+            aliases = with_self_aliases(load_asset(spark, out, "aliases"), entities)
+            mentions = extract_mentions(docs, aliases)
+            link_entities(docs, mentions, aliases, entities)
+            load_countries(spark, fixture["countries"])
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == []

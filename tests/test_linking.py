@@ -2,14 +2,22 @@
 (V3/W4), and the E3 entity-linking pipeline."""
 
 import math
+import random
+import sys
 
+import numpy as np
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from erkg_tutorials_spark.graph.pagerank import pagerank
 from erkg_tutorials_spark.linking.candidates import alias_candidates
-from erkg_tutorials_spark.linking.embed import cosine, embed_column, hashing_encode
+from erkg_tutorials_spark.linking.embed import (
+    cosine,
+    embed_column,
+    hashing_embed,
+    hashing_encode,
+)
 from erkg_tutorials_spark.pipelines.entity_linking import (
     run_entity_linking,
     with_self_aliases,
@@ -74,7 +82,46 @@ class TestEmbedding:
         assert math.isclose(val, 1.0, rel_tol=1e-6)
 
 
+    def test_jvm_tier_bit_equal_to_numpy_reference(self, spark):
+        """hashing_embed reproduces hashing_encode bit for bit: Python's
+        str.split() separators (every isspace() code point), case
+        mappings that change length or depend on context, accents,
+        empty and null text."""
+        seps = [c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace()]
+        words = [
+            "İstanbul", "İ", "ΣΟΦΟΣ", "ΟΔΟΣ.", "Σ", "σοφός", "ς", "café",
+            "naïve", "Ärger", "straße", "Ǆemal", "ﬁne", "ÉCOLE", "x", "Acme",
+            "acme", "\u200bzw", "bom\ufeff",
+        ]
+        rng = random.Random(20)
+        texts = ["", None, "   ", "ΣΑΣ ΣΑΣ", "İİ", "".join(seps) + "lead and trail" + "".join(seps)]
+        for _ in range(600):
+            texts.append(
+                "".join(rng.choice(words) + rng.choice(seps) for _ in range(rng.randint(0, 30)))
+            )
+        df = spark.createDataFrame(list(enumerate(texts)), "i long, t string")
+        cases = [(dim, norm) for dim in (7, 16, 64, 100) for norm in (True, False)]
+        rows = df.select(
+            "i", *[hashing_embed("t", d, nm).alias(f"e{k}") for k, (d, nm) in enumerate(cases)]
+        ).collect()
+        rows.sort(key=lambda r: r["i"])
+        for k, (dim, norm) in enumerate(cases):
+            got = np.array([r[f"e{k}"] for r in rows], dtype=np.float32)
+            want = hashing_encode(texts, dim, norm)
+            bad = np.flatnonzero((got.view(np.uint32) != want.view(np.uint32)).any(axis=1))
+            assert bad.size == 0, (dim, norm, [texts[i] for i in bad[:3]])
+
+
 class TestCandidates:
+    def test_caches_nothing(self, spark):
+        """Each side is read once, so nothing is left pinned."""
+        sc = spark.sparkContext
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        mentions = spark.createDataFrame([Row(mention_id="m1", text="machine learn")])
+        aliases = spark.createDataFrame([Row(alias="machine learning")])
+        assert alias_candidates(mentions, aliases).collect()
+        assert set(sc._jsc.getPersistentRDDs().keys()) == before
+
     def test_exact_match_always_candidate(self, spark):
         """SURVEY.md §7 invariant: exact match is always retrieved."""
         mentions = spark.createDataFrame(

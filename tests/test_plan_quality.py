@@ -67,7 +67,6 @@ class TestNoPythonInHotPath:
     # (ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas), never
     # row-at-a-time BatchEvalPython.
     PYTHON_OK = {
-        "v1_embed_hash",
         "multimodal_decode",
         "multimodal_frame_sample",
         "multimodal_resize",
