@@ -34,18 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def edge_support(e: DataFrame, nbrs: DataFrame | None = None) -> DataFrame:
-    """(u, v, s): triangle count per canonical edge of ``e(u, v)``
-    with u < v. Edges in no triangle are absent. Edge-iterator
-    enumeration over adjacency intersections (graph/triangles.py) —
-    the wedge shuffle of the former three-equi-join shape is gone,
-    which is where the dominant first peel round spent its time.
-    ``nbrs``: optional memoized full adjacency of the SAME edge set
-    (triangles._oriented_adjacency)."""
-    from erkg_tutorials_spark.graph.triangles import edge_support as _es
-
-    return _es(e, nbrs=nbrs)
+from erkg_tutorials_spark.graph.triangles import edge_support
 
 
 def k_truss(

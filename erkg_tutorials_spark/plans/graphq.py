@@ -1636,14 +1636,14 @@ def louvain_l1_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     query) — the trade_edges_fwd pattern. Eager-build memo: Louvain
     runs jobs (per-round localCheckpoints), so the build must happen
     OUTSIDE memo.py's global lock (r8 ADVICE)."""
-    from erkg_tutorials_spark.graph.louvain import louvain_one_level
+    from erkg_tutorials_spark.graph.louvain import louvain_level
     from erkg_tutorials_spark.plans.memo import memoized_eager as memoized
 
     return memoized(
         spark,
         sf_dir,
         "louvain_l1_labels",
-        lambda: louvain_one_level(
+        lambda: louvain_level(
             trade_edges_sym(spark, sf_dir),
             rounds=LOUVAIN_ROUNDS,
             move_class=F.col("id").startswith("c:"),
@@ -1656,9 +1656,8 @@ def g_louvain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic one-level Louvain: per-community member count, degree mass, intra-edge count, and exact-integer modularity numerator."""
     from erkg_tutorials_spark.graph.louvain import community_summary
 
-    edges = trade_edges_sym(spark, sf_dir)
     return community_summary(
-        edges, louvain_l1_labels(spark, sf_dir), m2=edges.count()
+        trade_edges_sym(spark, sf_dir), louvain_l1_labels(spark, sf_dir)
     )
 
 
@@ -1836,7 +1835,7 @@ def g_louvain_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         move_class=F.col("id").startswith("c:"),
         lbl1=louvain_l1_labels(spark, sf_dir),
     )
-    return community_summary(edges, lbl, m2=edges.count())
+    return community_summary(edges, lbl)
 
 
 # ---------------------------------------------------------------------------
@@ -2020,8 +2019,8 @@ def g_eigenvector_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mover runs directly over trade-COUNT edge mass — w(c,s) = number of
 # lineitems between customer c and supplier s — so modularity uses
 # real edge weight end to end instead of the distinct-edge 0/1
-# approximation. Reuses the weighted mover the supernode level already
-# has (graph/louvain.py louvain_weighted_level), now with the exact
+# approximation. Same mover as the unweighted level and the supernode
+# level (graph/louvain.py louvain_level reads ``w``), with the exact
 # bipartite alternating move class (the weighted BASE graph is still
 # customer↔supplier bipartite, so the independent sets are exact — no
 # md5-parity fallback needed). Gains stay integer cross-multiplied
@@ -2145,19 +2144,15 @@ def trade_wedges_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("g_louvain_weighted_l1", _louvain_weighted_l1_oracle())
 def g_louvain_weighted_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted level-1 Louvain over trade-count edge mass: per-community member count, weighted degree mass, intra-community weight, exact-integer modularity numerator."""
-    from erkg_tutorials_spark.graph.louvain import (
-        louvain_weighted_level,
-        weighted_community_summary,
-    )
+    from erkg_tutorials_spark.graph.louvain import community_summary, louvain_level
 
     wedges = trade_wedges_sym(spark, sf_dir)
-    lbl = louvain_weighted_level(
+    lbl = louvain_level(
         wedges,
         rounds=LOUVAIN_ROUNDS,
         move_class=F.col("id").startswith("c:"),
     )
-    m2 = wedges.agg(F.sum("w")).collect()[0][0]  # scalar bound
-    return weighted_community_summary(wedges, lbl, m2=m2)
+    return community_summary(wedges, lbl)
 
 
 # ---------------------------------------------------------------------------

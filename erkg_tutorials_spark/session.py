@@ -40,33 +40,12 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE coalesces DOWN from the initial partition count but never
-        # splits up, so a static 32/64 initial count caps every sort at
-        # (shuffle bytes / 64) per task regardless of scale — the r12
-        # 100x spill datum: the triangle kernel's 44 GB adjacency
-        # shuffle ran in 64 partitions and spilled 242 GB (mem+disk)
-        # through sorts that fit nowhere, while the SAME plan at 10x
-        # (4.3 GB, 0 spill) was fine. A static HIGH initial count is
-        # the opposite mistake (r12 A/B, fresh memos, local[32], 10x
-        # build): init=512 cost 2.3x on k-core peeling (12.6→28.4 s),
-        # 1.8x on triangle enumeration, 1.2x on k-truss — every map
-        # task writes, and AQE re-plans, a 512-way shuffle per round
-        # even after the reduce side coalesces back to 32. The dial is
-        # DATA-sized, not workload-static, exactly like
-        # spark.sql.shuffle.partitions itself (which a cluster operator
-        # sets to ~2-3x total cores, making the initial count naturally
-        # large at cluster scale): default = shuffle_partitions (AQE's
-        # own default), and SPARK_GRAFT_INIT_PARTITIONS raises it for
-        # known-big runs. The 100x notch itself ended up not needing
-        # the dial: the spill the 512 experiment targeted was killed
-        # at the PLAN level instead (triangles' SHUFFLE_HASH probe +
-        # single-execution enumeration — SCALING.md r12), which is the
-        # right order of attack: partition counts tune a sort's memory
-        # footprint, but a plan that never sorts the big side has no
-        # footprint to tune.
+        # AQE's initial partition count, pinned to the session's shuffle
+        # partitions so a run-time change of spark.sql.shuffle.partitions
+        # does not move it too. A static high count cost the iterative
+        # kernels 1.2-2.3x at 10x (SCALING.md r12).
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                os.environ.get("SPARK_GRAFT_INIT_PARTITIONS",
-                               str(shuffle_partitions)))
+                str(shuffle_partitions))
         # Dim tables (nation/region/countries/suspicions) are tiny; raise
         # the broadcast threshold so Catalyst picks broadcast-hash joins.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

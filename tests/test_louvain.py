@@ -1,6 +1,7 @@
-"""Deterministic one-level Louvain (graph/louvain.py): community
-recovery, the modularity-non-decreasing invariant over the alternating
-move schedule, and exact replayability."""
+"""Deterministic Louvain (graph/louvain.py): community recovery,
+the modularity-non-decreasing invariant over the alternating move
+schedule, exact replayability, the edge-weight and self-loop rules of
+the one level, and its checkpoint fallbacks."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import itertools
 
 from pyspark.sql import functions as F
 
-from erkg_tutorials_spark.graph.louvain import community_summary, louvain_one_level
+from erkg_tutorials_spark.graph.louvain import community_summary, louvain_level
 
 
 def _sym(spark, pairs):
@@ -33,7 +34,7 @@ def _mc():
 
 def test_two_cliques_recovered(spark):
     edges = _two_cliques(spark)
-    lbl = louvain_one_level(edges, rounds=4, move_class=_mc())
+    lbl = louvain_level(edges, rounds=4, move_class=_mc())
     got = {r["id"]: r["lbl"] for r in lbl.collect()}
     assert len({got[f"c:{i}"] for i in range(4)}) == 1
     assert len({got[f"s:{i}"] for i in range(4)}) == 1
@@ -45,12 +46,11 @@ def test_modularity_non_decreasing_per_round(spark):
     on the alternating independent-set schedule the partition's exact
     modularity numerator must not decrease round over round."""
     edges = _two_cliques(spark)
-    m2 = edges.count()
     prev = None
     for rounds in range(1, 5):
-        lbl = louvain_one_level(edges, rounds=rounds, move_class=_mc())
+        lbl = louvain_level(edges, rounds=rounds, move_class=_mc())
         q_num = (
-            community_summary(edges, lbl, m2=m2)
+            community_summary(edges, lbl)
             .agg(F.sum("mod_num").alias("q"))
             .collect()[0]["q"]
         )
@@ -65,12 +65,11 @@ def test_modularity_non_decreasing_on_hub_graph(spark):
         (f"c:{i}", "s:9") for i in range(0, 12, 2)
     ]
     edges = _sym(spark, pairs)
-    m2 = edges.count()
     prev = None
     for rounds in range(1, 5):
-        lbl = louvain_one_level(edges, rounds=rounds, move_class=_mc())
+        lbl = louvain_level(edges, rounds=rounds, move_class=_mc())
         q_num = (
-            community_summary(edges, lbl, m2=m2)
+            community_summary(edges, lbl)
             .agg(F.sum("mod_num").alias("q"))
             .collect()[0]["q"]
         )
@@ -83,19 +82,19 @@ def test_exactly_replayable(spark):
     edges = _two_cliques(spark)
     a = sorted(
         (r["id"], r["lbl"])
-        for r in louvain_one_level(edges, rounds=4, move_class=_mc()).collect()
+        for r in louvain_level(edges, rounds=4, move_class=_mc()).collect()
     )
     b = sorted(
         (r["id"], r["lbl"])
-        for r in louvain_one_level(edges, rounds=4, move_class=_mc()).collect()
+        for r in louvain_level(edges, rounds=4, move_class=_mc()).collect()
     )
     assert a == b
 
 
 def test_summary_accounts_every_vertex_and_edge(spark):
     edges = _two_cliques(spark)
-    lbl = louvain_one_level(edges, rounds=4, move_class=_mc())
-    summ = community_summary(edges, lbl, m2=edges.count()).collect()
+    lbl = louvain_level(edges, rounds=4, move_class=_mc())
+    summ = community_summary(edges, lbl).collect()
     assert sum(r["n_members"] for r in summ) == 8
     assert sum(r["tot_degree"] for r in summ) == edges.count()
     # intra-community sym edges: both 4-cliques fully internal (12
@@ -119,9 +118,8 @@ def test_two_level_refines_without_losing_vertices(spark):
         + [("c:4", "c:5")]                       # weak cross-super link
     )
     edges = _sym(spark, pairs)
-    m2 = edges.count()
 
-    lbl1 = louvain_one_level(edges, rounds=4, move_class=_mc())
+    lbl1 = louvain_level(edges, rounds=4, move_class=_mc())
     lbl2 = louvain_two_level(edges, rounds1=4, rounds2=4, move_class=_mc())
 
     ids1 = {r["id"] for r in lbl1.collect()}
@@ -132,8 +130,8 @@ def test_two_level_refines_without_losing_vertices(spark):
     n2 = lbl2.select("lbl").distinct().count()
     assert n2 <= n1  # aggregation can only merge
 
-    q1 = community_summary(edges, lbl1, m2=m2).agg(F.sum("mod_num")).collect()[0][0]
-    q2 = community_summary(edges, lbl2, m2=m2).agg(F.sum("mod_num")).collect()[0][0]
+    q1 = community_summary(edges, lbl1).agg(F.sum("mod_num")).collect()[0][0]
+    q2 = community_summary(edges, lbl2).agg(F.sum("mod_num")).collect()[0][0]
     assert q2 >= q1
 
 
@@ -154,25 +152,19 @@ def test_weighted_l1_modularity_non_decreasing(spark):
     """r8 VERDICT item 8: the weighted level-1 mover under the
     bipartite alternating schedule keeps the weighted modularity
     numerator non-decreasing round over round."""
-    from erkg_tutorials_spark.graph.louvain import (
-        louvain_weighted_level,
-        weighted_community_summary,
-    )
-
     pairs = (
         [(f"c:{i}", f"s:{i % 3}", 5) for i in range(9)]
         + [(f"c:{i}", "s:9", 1) for i in range(0, 9, 2)]
     )
     rows = [(a, b, w) for a, b, w in pairs] + [(b, a, w) for a, b, w in pairs]
     wedges = spark.createDataFrame(rows, "src string, dst string, w long")
-    m2 = sum(w for _, _, w in rows)
     prev = None
     for rounds in range(1, 5):
-        lbl = louvain_weighted_level(
+        lbl = louvain_level(
             wedges, rounds=rounds, move_class=F.col("id").startswith("c:")
         )
         q_num = (
-            weighted_community_summary(wedges, lbl, m2=m2)
+            community_summary(wedges, lbl)
             .agg(F.sum("mod_num").alias("q"))
             .collect()[0]["q"]
         )
@@ -185,8 +177,6 @@ def test_weighted_l1_heavy_weight_dominates(spark):
     """Weight-awareness: two clusters tied by MANY light cross edges
     vs FEW heavy intra edges — the weighted mover must group by the
     heavy mass, which the unweighted 0/1 view would get wrong."""
-    from erkg_tutorials_spark.graph.louvain import louvain_weighted_level
-
     # c:0,c:1 trade heavily with s:0; c:2,c:3 heavily with s:1;
     # every customer also touches the other supplier once
     pairs = (
@@ -197,10 +187,75 @@ def test_weighted_l1_heavy_weight_dominates(spark):
     )
     rows = [(a, b, w) for a, b, w in pairs] + [(b, a, w) for a, b, w in pairs]
     wedges = spark.createDataFrame(rows, "src string, dst string, w long")
-    lbl = louvain_weighted_level(
+    lbl = louvain_level(
         wedges, rounds=4, move_class=F.col("id").startswith("c:")
     )
     got = {r["id"]: r["lbl"] for r in lbl.collect()}
     assert got["c:0"] == got["c:1"] == got["s:0"]
     assert got["c:2"] == got["c:3"] == got["s:1"]
     assert got["s:0"] != got["s:1"]
+
+
+def test_weight_defaults_to_one_and_self_loops_never_score(spark):
+    """One level, one summary for every edge table: without a ``w``
+    column each row weighs 1, and a self-loop adds to its vertex's
+    degree and to the intra-community mass but never to a move score.
+    Star c:0 - s:0 - c:1 plus the self-loop (c:0, c:0), m2 = 5: in
+    round 0 c:0 scores 5*1 - 2*2 = 1 for s:0 against 0 for staying; a
+    self-loop counted in k_ic would score staying 5*1 and keep c:0
+    alone."""
+    rows = [
+        ("c:0", "s:0"), ("s:0", "c:0"), ("c:1", "s:0"), ("s:0", "c:1"),
+        ("c:0", "c:0"),
+    ]
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    wedges = edges.withColumn("w", F.lit(1).cast("long"))
+
+    def run(e):
+        lbl = louvain_level(e, rounds=4, move_class=_mc())
+        return (
+            sorted(map(tuple, lbl.collect())),
+            sorted(map(tuple, community_summary(e, lbl).collect())),
+        )
+
+    labels, summary = run(edges)
+    assert labels == [("c:0", "s:0"), ("c:1", "s:0"), ("s:0", "s:0")]
+    # (community, n_members, tot_degree, in_sym, mod_num = 5*5 - 5^2)
+    assert summary == [("s:0", 3, 5, 5, 0)]
+    assert run(wedges) == (labels, summary)
+    # the same convention on a graph without self-loops
+    cliques = _two_cliques(spark)
+    assert run(cliques) == run(cliques.withColumn("w", F.lit(1).cast("long")))
+
+
+def test_checkpoint_fallbacks_keep_labels(spark, monkeypatch):
+    """If localCheckpoint ever stops returning a bare LogicalRDD plan,
+    both private-API paths of graph/ckpt.py fail closed: origin
+    severing returns the frame as is, RDD attribution releases
+    nothing, each warns once, and the labels do not change."""
+    import warnings
+
+    from erkg_tutorials_spark.graph import ckpt
+
+    edges = _two_cliques(spark)
+    expected = sorted(map(tuple, louvain_level(edges, 4, _mc()).collect()))
+
+    cls = type(edges)
+    real = cls.localCheckpoint
+    monkeypatch.setattr(
+        cls, "localCheckpoint", lambda self, *a, **k: real(self, *a, **k).select("*")
+    )
+    flags = (ckpt._warned_sever_failure, ckpt._warned_extraction_failure)
+    ckpt._warned_sever_failure = ckpt._warned_extraction_failure = False
+    try:
+        with warnings.catch_warnings(record=True) as seen:
+            warnings.simplefilter("always")
+            got = sorted(map(tuple, louvain_level(edges, 4, _mc()).collect()))
+        fired = (ckpt._warned_sever_failure, ckpt._warned_extraction_failure)
+    finally:
+        ckpt._warned_sever_failure, ckpt._warned_extraction_failure = flags
+    assert got == expected
+    assert fired == (True, True)
+    messages = [str(x.message) for x in seen if x.category is RuntimeWarning]
+    assert sum("sever checkpoint origin" in m for m in messages) == 1, messages
+    assert sum("could not attribute" in m for m in messages) == 1, messages

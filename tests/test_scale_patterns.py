@@ -260,7 +260,7 @@ class TestKTruss:
     def test_every_truss_edge_has_support(self, spark):
         """Internal consistency on real data: within the returned
         truss, every edge's support is >= k-2."""
-        from erkg_tutorials_spark.graph.ktruss import edge_support
+        from erkg_tutorials_spark.graph.triangles import edge_support
         from erkg_tutorials_spark.plans.graphq import KTRUSS_K, g_ktruss
 
         truss = g_ktruss(spark, SF_DIR)

@@ -302,7 +302,7 @@ def run_scale(spark, copies: int, dst: str, only: set | None = None) -> dict:
     try:
         if not _want("louvain_closure"):
             raise _Skip
-        from erkg_tutorials_spark.graph.louvain import louvain_weighted_level
+        from erkg_tutorials_spark.graph.louvain import louvain_level
         from erkg_tutorials_spark.plans.graphq import (
             LOUVAIN_ROUNDS,
             trade_wedges_sym,
@@ -311,7 +311,7 @@ def run_scale(spark, copies: int, dst: str, only: set | None = None) -> dict:
         t0 = time.time()
         summary_rows = qs["g_louvain_weighted_l1"](spark, built).count()
         secs = round(time.time() - t0, 2)
-        lbl = louvain_weighted_level(
+        lbl = louvain_level(
             trade_wedges_sym(spark, built),
             rounds=LOUVAIN_ROUNDS,
             move_class=F.col("id").startswith("c:"),
@@ -332,7 +332,7 @@ def run_scale(spark, copies: int, dst: str, only: set | None = None) -> dict:
             F.sum("members").alias("n_labelled"),
             F.count("*").alias("n_communities"),
         ).collect()[0]
-        n1_v = louvain_weighted_level(
+        n1_v = louvain_level(
             trade_wedges_sym(spark, SF1),
             rounds=LOUVAIN_ROUNDS,
             move_class=F.col("id").startswith("c:"),
